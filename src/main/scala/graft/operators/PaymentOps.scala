@@ -117,6 +117,29 @@ object PaymentOps {
   def rekeyToAccountAmount(df: DataFrame): DataFrame =
     df.select(col("fromAccount"), col("amount"))
 
+  /** O3→O6 — the chain every payment consumer starts from: rails filter,
+    * currency branch, FX on the USD branch, merge. Reference
+    * `PaymentTopology.java:45-72`.
+    */
+  def merged(payments: DataFrame): DataFrame = {
+    val Seq(gbp, usd) = branchByCurrency(railsFilter(payments))
+    merge(gbp, fxConvert(usd))
+  }
+
+  /** O10+O11 — the merged stream tagged with its outbound topic in a
+    * `topic` column: FOO rails → `rails-foo-topic`, BAR rails →
+    * `rails-bar-topic` (reference `PaymentTopology.java:90-97`,
+    * `application.yml:13-15`). One tagged frame, so a partitioned write
+    * fills both sinks in one pass.
+    */
+  def routed(merged: DataFrame): DataFrame =
+    branchFirstMatch(
+      merged,
+      "topic",
+      Seq("rails-foo-topic" -> (col("rails") === Rails.Foo),
+          "rails-bar-topic" -> (col("rails") === Rails.Bar))
+    )
+
   /** O8+O9 — grouped running balance: `fromAccount → Σ amount`, the
     * reference's `"balance"` KTable (`PaymentTopology.java:75-88`:
     * initializer 0L, aggregator agg+value, no window, no TTL).
@@ -129,24 +152,6 @@ object PaymentOps {
     rekeyToAccountAmount(df)
       .groupBy(col("fromAccount"))
       .agg(sum(col("amount")).as("balance"))
-
-  /** Skew-resistant variant of [[balances]]: two-level salted aggregation.
-    * A hot `fromAccount` (one key receiving a large fraction of the stream)
-    * would funnel into a single reduce task; salting spreads it across
-    * `saltBuckets` partial sums, and the second (tiny) aggregation folds
-    * the partials. Sum is associative+commutative, so the result is
-    * IDENTICAL to [[balances]] — asserted in PaymentOpsSpec.
-    *
-    * At 100 TB prefer AQE's skew-join/agg handling first; explicit salting
-    * is for known-pathological keys. The salt is `pmod(hash(paymentId), n)`
-    * — deterministic per record, uniform across buckets.
-    */
-  def balancesSalted(df: DataFrame, saltBuckets: Int = 16): DataFrame =
-    df.select(col("fromAccount"), col("amount"), pmod(hash(col("paymentId")), lit(saltBuckets)).as("salt"))
-      .groupBy(col("fromAccount"), col("salt"))
-      .agg(sum(col("amount")).as("partial"))
-      .groupBy(col("fromAccount"))
-      .agg(sum(col("partial")).as("balance"))
 
   /** O10 — branch by rails on the merged stream: FOO / BAR (nothing can miss
     * both, O3 guaranteed the whitelist). Reference `PaymentTopology.java:90-93`.
@@ -164,11 +169,9 @@ object PaymentOps {
     * outputs of `PaymentTopology.buildPipeline` (`PaymentTopology.java:39-98`).
     */
   def topology(payments: DataFrame): PaymentTopology = {
-    val supported        = railsFilter(payments)
-    val Seq(gbp, usd)    = branchByCurrency(supported)
-    val merged           = merge(gbp, fxConvert(usd))
-    val Seq(foo, bar)    = branchByRails(merged)
-    PaymentTopology(foo, bar, balances(merged), merged)
+    val m             = merged(payments)
+    val Seq(foo, bar) = branchByRails(m)
+    PaymentTopology(foo, bar, balances(m), m)
   }
 }
 

@@ -115,11 +115,8 @@ object ParityQueries {
     )
 
   /** Merged stream = GBP branch ∪ FX-converted USD branch (O3→O6). */
-  private def merged(spark: SparkSession, sfDir: String): DataFrame = {
-    val supported     = PaymentOps.railsFilter(paymentsFromEvents(spark, sfDir))
-    val Seq(gbp, usd) = PaymentOps.branchByCurrency(supported)
-    PaymentOps.merge(gbp, PaymentOps.fxConvert(usd))
-  }
+  private def merged(spark: SparkSession, sfDir: String): DataFrame =
+    PaymentOps.merged(paymentsFromEvents(spark, sfDir))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // O1 — source/scan with projection (column pruning reaches the scan).

@@ -930,14 +930,12 @@ object StreamQueries {
         .orderBy(col("from_account"))
     }),
 
-    // The topology's DUAL-RAILS SINK ROUTING byte-gated through the
-    // single-pass entry point (`PaymentPipeline.startSinglePass` — one
-    // streaming query writes both outbound "topics" via a tagged
-    // partitioned write AND maintains the delta changelog, the reference's
-    // one-consumer execution shape, `PaymentTopology.java:90-97`). The
-    // registered result summarizes the routed sink partitions per topic;
-    // a record routed to the wrong rails, dropped, or duplicated breaks
-    // count and total.
+    // The topology's DUAL-RAILS SINK ROUTING byte-gated through
+    // `PaymentPipeline.start`'s routing query (both outbound "topics" in
+    // one tagged partitioned file-sink write, `PaymentTopology.java:90-97`).
+    // The registered result summarizes the routed sink partitions per
+    // topic; a record routed to the wrong rails, dropped, or duplicated
+    // breaks count and total.
     "q175_payment_sinks_stream" -> ((s, dir) => {
       val in  = paymentsMemo(s, dir)
       val tmp = freshTmp("paysink")
@@ -946,9 +944,9 @@ object StreamQueries {
           .schema(s.read.parquet(in).schema)
           .option("maxFilesPerTrigger", "2")
           .parquet(in)
-        val (q, _) = graft.streaming.PaymentPipeline.startSinglePass(stream, s"$tmp/ckpt", s"$tmp/sink")
-        try q.processAllAvailable()
-        finally q.stop()
+        val rt = graft.streaming.PaymentPipeline.start(stream, s"$tmp/ckpt", s"$tmp/sink")
+        try rt.processAllAvailable()
+        finally rt.stop()
       }
       s.read.parquet(s"$tmp/sink")
         .groupBy(col("topic"))

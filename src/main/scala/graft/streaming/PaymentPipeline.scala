@@ -8,16 +8,18 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Structured-Streaming twin of the reference's runtime
   * (`processor/PaymentTopology.java:39-98` wired by
-  * `KafkaStreamsDemoConfiguration.java:34-48`): the same operator chain
-  * [[PaymentOps.topology]] applied to an unbounded source, with
+  * `KafkaStreamsDemoConfiguration.java:34-48`), and the engine's one
+  * payment path: [[start]] → [[BalanceStore]] → [[RestService]]. It runs
+  * the chain [[PaymentOps.merged]] over an unbounded source, with
   *   - the balance KTable as a `groupBy.sum` in **update** output mode
   *     (each micro-batch emits only the keys whose sum changed — exactly the
   *     KTable changelog contract, `PaymentTopology.java:78-88`);
   *   - queryable state ([[BalanceStore]]) maintained by a `foreachBatch`
   *     upsert, standing in for the reference's interactive-query store
   *     (`controller/BalanceController.java:24-33`) — SURVEY.md §7.4 Hard #1;
-  *   - sink routing for the FOO/BAR outbound topics as ONE tagged stream
-  *     written per-branch in a single pass (`PaymentTopology.java:90-97`).
+  *   - sink routing for the FOO/BAR outbound topics ([[PaymentOps.routed]])
+  *     as ONE tagged stream written per-branch in a single pass
+  *     (`PaymentTopology.java:90-97`).
   *
   * Scale notes (100 TB/day stream): state is per-`fromAccount` running sums —
   * Spark's streaming state store partitions it by the shuffle hash of the
@@ -34,15 +36,6 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * same (key, value, batch_id) contract and compact periodically.
   */
 object PaymentPipeline {
-
-  /** The data files of a parquet changelog directory (the part-* files a
-    * write produced — one shared definition for both stores' compaction
-    * snapshot and the boundedness test surface).
-    */
-  private def partFiles(dir: String): Array[java.io.File] =
-    Option(new java.io.File(dir).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isFile && f.getName.startsWith("part-"))
 
   /** Queryable per-account balance state — the Spark stand-in for
     * `kafkaStreams.store("balance", keyValueStore())`, backed by a parquet
@@ -63,22 +56,21 @@ object PaymentPipeline {
     * compacted row, or both — identical (key, value, batch_id) content
     * either way, and `max_by(balance, batch_id)` is tie-stable on
     * duplicates. A production deployment maps this 1:1 onto Delta/Iceberg
-    * MERGE + OPTIMIZE with snapshot-isolated reads (here, plain parquet on
-    * a local FS: a read that lists a file the compactor deletes mid-scan
-    * would need `spark.sql.files.ignoreMissingFiles` — the harness drives
-    * batches and lookups from one thread).
+    * MERGE + OPTIMIZE with snapshot-isolated reads.
+    *
+    * Known open defect: lookups do NOT run on the stream's thread.
+    * [[RestService]] answers them on its own 4-thread pool while the
+    * balance query keeps committing, so a `get` can list a data file that
+    * a concurrent [[compact]] then deletes mid-scan; that lookup throws
+    * and is answered 500 (about 3% of lookups on the benchmark's
+    * `pay_live`, `lookup_ok_pct` about 97). Setting
+    * `spark.sql.files.ignoreMissingFiles` would only turn the 500 into a
+    * silent wrong 404 or a stale balance. The fix, a versioned in-process
+    * index published per batch, is ROADMAP open item 2.
     *
     * @param compactEvery rewrite cadence in batches; <= 0 disables.
-    * @param compactPartitions output files per compaction — sized here for
-    *        tiny local state; a 100 TB deployment sizes it to live-key
-    *        volume / 128 MB (or lets Delta OPTIMIZE pick).
     */
-  final class BalanceStore(
-      spark: SparkSession,
-      dir: String,
-      compactEvery: Long = 16L,
-      compactPartitions: Int = 1
-  ) {
+  final class BalanceStore(spark: SparkSession, dir: String, compactEvery: Long = 16L) {
 
     private val schema = "fromAccount STRING, balance BIGINT, batch_id BIGINT"
 
@@ -136,23 +128,21 @@ object PaymentPipeline {
       * plans against the snapshot — the new file doesn't exist yet), then
       * delete the snapshot. Every intermediate state serves correct reads.
       *
-      * The rewrite is `repartition(compactPartitions, key)`, never
-      * `coalesce`: coalesce(1) would collapse the latest-per-key
-      * AGGREGATION itself into one task (the upstream stages inherit the
-      * coalesced parallelism), while the key-hash repartition keeps the
-      * aggregation at full width and only bounds the WRITE to
-      * `compactPartitions` parallel tasks/files — the shape that still
-      * works when the live-key volume is cluster-sized.
+      * The rewrite is `repartition(1, key)`, never `coalesce(1)`: coalesce
+      * would collapse the latest-per-key AGGREGATION itself into one task
+      * (the upstream stages inherit the coalesced parallelism), while the
+      * key-hash repartition keeps the aggregation at full width and only
+      * bounds the WRITE to one file.
       */
     def compact(): Unit = changelog.foreach { log =>
-      val old = partFiles(dir)
+      val old = partFiles
       log
         .groupBy(col("fromAccount"))
         .agg(
           max_by(col("balance"), col("batch_id")).as("balance"),
           max(col("batch_id")).as("batch_id")
         )
-        .repartition(compactPartitions, col("fromAccount"))
+        .repartition(1, col("fromAccount"))
         .write
         .mode("append")
         .parquet(dir)
@@ -162,128 +152,18 @@ object PaymentPipeline {
     /** Data files currently in the changelog directory (test/ops surface —
       * the boundedness compaction guarantees is asserted on this).
       */
-    def dataFileCount: Int = partFiles(dir).length
+    def dataFileCount: Int = partFiles.length
+
+    /** The part-* files the writes produced: compaction's delete snapshot. */
+    private def partFiles: Array[java.io.File] =
+      Option(new java.io.File(dir).listFiles())
+        .getOrElse(Array.empty[java.io.File])
+        .filter(f => f.isFile && f.getName.startsWith("part-"))
   }
 
-  /** Delta-changelog variant for [[startSinglePass]]: rows are per-batch
-    * ADDITIONS (`fromAccount`, `delta`, `batch_id`), so the balance is the
-    * sum of deltas. Reads first dedup replayed appends per (account,
-    * batch_id) — a crash-replayed batch appends identical rows and must not
-    * double-count (this closes the replay caveat the in-memory round-1
-    * store documented).
-    *
-    * COMPACTION (the read-path bound [[BalanceStore]] already has): batches
-    * older than a caller-supplied cutoff merge into ONE base row per
-    * account, tagged `batch_id = -(cutoff) - 2` — the CUTOFF RIDES IN THE
-    * TAG, which is what makes every intermediate file state read
-    * correctly: readers reconstruct the LOGICAL state as "winning base
-    * (greatest cutoff) + real batches >= that cutoff", so any state that
-    * LISTS old rows + new base together (a crash between the compaction's
-    * append and its deletes, or a reader that indexed before the deletes)
-    * cannot double-count — the old rows/bases are excluded by the winning
-    * base's cutoff filter. Same file-listing caveat as [[BalanceStore]]:
-    * a reader that planned against a file the compactor then DELETED
-    * mid-scan fails with FileNotFoundException unless
-    * `spark.sql.files.ignoreMissingFiles` is set — the harness drives
-    * batches and lookups from one thread; a concurrent query surface (the
-    * REST store) wants Delta/Iceberg, whose snapshot isolation makes both
-    * the value-level and the file-level race disappear.
-    *
-    * Replay safety: per-batch rows survive for every batch `>= cutoff`, so
-    * replayed appends of those batches still dedup at read time; batches
-    * `< cutoff` cannot replay once the streaming checkpoint has committed
-    * past them — pass a cutoff at or below the last committed batch.
-    */
-  final class DeltaBalanceStore(spark: SparkSession, dir: String) {
-
-    private val schema = "fromAccount STRING, delta BIGINT, batch_id BIGINT"
-
-    private def changelog: Option[DataFrame] =
-      if (new java.io.File(dir).exists()) Some(spark.read.schema(schema).parquet(dir))
-      else None
-
-    /** The logical per-(account, batch) rows: replayed appends deduped,
-      * stale rows/bases below the winning base's cutoff dropped. `cutoff`
-      * is the winning base's horizon (null where no base exists); base
-      * rows keep their negative tag so recompaction includes them.
-      */
-    private def logicalRows(log: DataFrame): DataFrame = {
-      val dd = log
-        .groupBy(col("fromAccount"), col("batch_id"))
-        .agg(max(col("delta")).as("delta")) // identical on replay — max dedups
-      val winning = dd
-        .filter(col("batch_id") <= -2L)
-        .groupBy(col("fromAccount"))
-        .agg(max(-col("batch_id") - 2L).as("cutoff"))
-      dd.join(winning, Seq("fromAccount"), "left")
-        .filter(
-          col("cutoff").isNull ||                 // no base: everything counts
-            col("batch_id") === -col("cutoff") - 2L || // the winning base itself
-            col("batch_id") >= col("cutoff")      // real batches at/after the horizon
-        )
-    }
-
-    def get(account: String): Option[Long] =
-      changelog.flatMap { log =>
-        val r = logicalRows(log.filter(col("fromAccount") === account))
-          .agg(sum(col("delta")))
-          .head()
-        if (r.isNullAt(0)) None else Some(r.getLong(0))
-      }
-
-    private[streaming] def append(batch: Dataset[Row], batchId: Long): Unit =
-      batch
-        .withColumn("batch_id", lit(batchId))
-        .write
-        .mode("append")
-        .parquet(dir)
-
-    /** Merge every logical row with `batch_id < beforeBatchId` (the winning
-      * base's negative tag always qualifies) into one base row per account
-      * tagged `-(beforeBatchId) - 2`; real batches at/after the cutoff stay
-      * as-is. File order: append the merged rows, then delete the
-      * snapshot — correct at every intermediate state (see class doc).
-      *
-      * @param beforeBatchId the EXCLUSIVE merge bound: every batch
-      *        STRICTLY BELOW it must be checkpoint-committed (replay
-      *        safety, class doc). The in-flight batch's own id is
-      *        therefore a safe value — batches < batchId are committed by
-      *        the time its foreachBatch runs, and the in-flight batch
-      *        itself stays a real row. Do NOT widen the merge to <= or
-      *        pass batchId + 1: folding an uncommitted batch into the
-      *        base double-counts it when a crash replays that batch.
-      */
-    def compact(beforeBatchId: Long): Unit = changelog.foreach { log =>
-      require(beforeBatchId >= 0, s"cutoff must be a committed batch id, got $beforeBatchId")
-      val old = partFiles(dir)
-      val logical = logicalRows(log)
-      val base = logical
-        .filter(col("batch_id") < beforeBatchId) // includes any prior base (negative tag)
-        .groupBy(col("fromAccount"))
-        .agg(sum(col("delta")).as("delta"))
-        .withColumn("batch_id", lit(-beforeBatchId - 2L))
-      val keep = logical.filter(col("batch_id") >= beforeBatchId)
-      base
-        .unionByName(keep.select(col("fromAccount"), col("delta"), col("batch_id")))
-        .select(col("fromAccount"), col("delta"), col("batch_id"))
-        // key-hash repartition, not coalesce(1): the write stays bounded
-        // (one file here — tiny local state) without collapsing the
-        // upstream merge aggregation into a single task (BalanceStore's
-        // compact discipline; a deployment raises the partition count to
-        // live-key volume / 128 MB)
-        .repartition(1, col("fromAccount"))
-        .write
-        .mode("append")
-        .parquet(dir)
-      old.foreach(_.delete())
-    }
-
-    /** Data files currently in the changelog (boundedness test surface). */
-    def dataFileCount: Int = partFiles(dir).length
-  }
-
-  /** Handles to the running topology: the two branch queries' shared writer,
-    * the balance query, and the queryable store.
+  /** Handles to the running topology: the routing query (both outbound
+    * topics in one partitioned write), the balance query, and the
+    * queryable store.
     */
   final case class RunningTopology(
       routing: StreamingQuery,
@@ -302,7 +182,9 @@ object PaymentPipeline {
 
   /** Wire the full reference topology over a streaming payment DataFrame
     * (from [[fromKafka]], a MemoryStream, or any streaming source with the
-    * payment schema).
+    * payment schema) as two queries over the same source: the exactly-once
+    * routing sink and the update-mode balance aggregation feeding the
+    * [[BalanceStore]]. A tick is visible once both have committed.
     *
     * @param sinkDir  rows routed to the FOO/BAR "topics" land in
     *                 `sinkDir/topic=rails-foo-topic/` etc. as parquet —
@@ -321,26 +203,16 @@ object PaymentPipeline {
     // hidden-path convention), so one output root serves both surfaces
     val store = new BalanceStore(payments.sparkSession, s"$sinkDir/_balance_state", compactEvery)
 
-    val supported     = PaymentOps.railsFilter(payments)
-    val Seq(gbp, usd) = PaymentOps.branchByCurrency(supported)
-    val merged        = PaymentOps.merge(gbp, PaymentOps.fxConvert(usd))
-
-    // O10+O11 — one tagged stream, partitioned write = both sinks in one pass.
-    val routed = PaymentOps.branchFirstMatch(
-      merged,
-      "topic",
-      Seq(
-        "rails-foo-topic" -> (col("rails") === "BANK_RAILS_FOO"),
-        "rails-bar-topic" -> (col("rails") === "BANK_RAILS_BAR")
-      )
-    )
+    val merged = PaymentOps.merged(payments)
     // Native file sink, not foreachBatch-append: the sink's _spark_metadata
     // transaction log records exactly which files each batch committed, so a
     // crash-replayed batch overwrites instead of duplicating (foreachBatch
     // with blind append would write the batch twice) and readers of sinkDir
     // see only committed files. partitionBy("topic") keeps both outbound
     // "topics" in one pass over the tagged union.
-    val routing = routed.writeStream
+    val routing = PaymentOps
+      .routed(merged)
+      .writeStream
       .queryName("graft-sink-routing")
       .format("parquet")
       .option("path", sinkDir)
@@ -364,54 +236,6 @@ object PaymentPipeline {
       .start()
 
     RunningTopology(routing, balance, store)
-  }
-
-  /** Single-pass alternative to [[start]]: ONE streaming query reads the
-    * source once per micro-batch, writes both sink branches (partitioned
-    * write) AND appends the batch's per-account deltas to the delta
-    * changelog — the reference's actual execution shape (one topology, one
-    * consumer). Balances are delta-sums; the store dedups replayed batch_ids
-    * at read time, so a crash-replayed batch cannot double-count.
-    */
-  def startSinglePass(
-      payments: DataFrame,
-      checkpointDir: String,
-      sinkDir: String,
-      compactEvery: Long = 16L
-  ): (StreamingQuery, DeltaBalanceStore) = {
-    val store = new DeltaBalanceStore(payments.sparkSession, s"$sinkDir/_balance_state")
-
-    val supported     = PaymentOps.railsFilter(payments)
-    val Seq(gbp, usd) = PaymentOps.branchByCurrency(supported)
-    val merged        = PaymentOps.merge(gbp, PaymentOps.fxConvert(usd))
-    val routed = PaymentOps.branchFirstMatch(
-      merged,
-      "topic",
-      Seq(
-        "rails-foo-topic" -> (col("rails") === "BANK_RAILS_FOO"),
-        "rails-bar-topic" -> (col("rails") === "BANK_RAILS_BAR")
-      )
-    )
-
-    val query = routed.writeStream
-      .queryName("graft-single-pass")
-      .option("checkpointLocation", s"$checkpointDir/single")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        batch.persist()
-        batch.write.mode("append").partitionBy("topic").parquet(sinkDir)
-        store.append(
-          batch.groupBy(col("fromAccount")).agg(sum(col("amount")).as("delta")),
-          batchId
-        )
-        // every batch < batchId is checkpoint-committed by the time this
-        // foreachBatch runs — a safe compaction cutoff (replay contract)
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          store.compact(batchId)
-        batch.unpersist()
-        ()
-      }
-      .start()
-    (query, store)
   }
 
   /** O1 — the Kafka source decoded to payment columns (requires the

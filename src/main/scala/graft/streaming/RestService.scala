@@ -9,9 +9,11 @@ import java.nio.charset.StandardCharsets
   * streaming state this engine maintains:
   *
   *   - `GET /v1/kafka-streams/balance/{account}` — point lookup against the
-  *     [[PaymentPipeline.BalanceStore]] changelog; absent key ⇒ HTTP 404,
-  *     present ⇒ 200 with the Long balance as the body. Twin of
-  *     `controller/BalanceController.java:22-35` (store `get`, null→404).
+  *     [[PaymentPipeline.BalanceStore]] changelog that
+  *     [[PaymentPipeline.start]] maintains (the one payment path); absent
+  *     key ⇒ HTTP 404, present ⇒ 200 with the Long balance as the body.
+  *     Twin of `controller/BalanceController.java:22-35` (store `get`,
+  *     null→404).
   *   - `GET /v1/kafka-streams/topology` — the current plan text, twin of
   *     `controller/TopologyController.java:20-23` (`Topology#describe`).
   *   - `GET /v1/kafka-streams/dim/{user}?at=T` — the BalanceController
@@ -23,11 +25,14 @@ import java.nio.charset.StandardCharsets
   *
   * Built on the JDK's `com.sun.net.httpserver` so the library adds no HTTP
   * dependency; a production deployment would front the same two functions
-  * with its own stack. The handler thread only runs the store's point-lookup
+  * with its own stack. The handler threads only run the store's point-lookup
   * SQL (a pushed-down parquet filter) — the same worker-thread-reads-
   * streams-thread-state shape (and eventual-consistency window) the
   * reference's integration test tolerates
-  * (`KafkaStreamsPaymentIntegrationTest.java:185-204`).
+  * (`KafkaStreamsPaymentIntegrationTest.java:185-204`). Those lookups run
+  * on a 4-thread pool BESIDE the balance stream, so one can race the
+  * store's compaction and be answered 500 — the open defect described on
+  * [[PaymentPipeline.BalanceStore]] (ROADMAP open item 2).
   */
 final class RestService(
     getBalance: String => Option[Long],

@@ -92,17 +92,6 @@ class PaymentOpsSpec extends AnyFunSuite with SparkSpec {
     assert(dropped.count() == 0)
   }
 
-  test("salted two-level aggregation equals the plain grouped sum (skew path)") {
-    // 1000 records, 90% on one hot account — the skew scenario salting targets.
-    val skewed = (1 to 1000).map { i =>
-      PaymentEvent(s"p$i", i.toLong, "GBP", "t", if (i % 10 == 0) s"cold$i" else "HOT", "BANK_RAILS_FOO")
-    }.toDF()
-    val plain  = PaymentOps.balances(skewed).as[(String, Long)].collect().toMap
-    val salted = PaymentOps.balancesSalted(skewed).as[(String, Long)].collect().toMap
-    assert(plain == salted)
-    assert(plain("HOT") == (1 to 1000).filter(_ % 10 != 0).map(_.toLong).sum)
-  }
-
   test("full topology: balances ABC=210, XYZ=800, DEF absent (PaymentTopologyTest.java:142-145)") {
     val topo = PaymentOps.topology(golden)
     val bal  = topo.balances.as[(String, Long)].collect().toMap

@@ -191,9 +191,7 @@ class StreamQueriesSpec extends AnyFunSuite with SparkSpec {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got == balances, "streamed snapshot differs from the batch topology")
     val routed = graft.operators.PaymentOps
-      .branchFirstMatch(t.merged, "topic",
-        Seq("rails-foo-topic" -> (col("rails") === "BANK_RAILS_FOO"),
-            "rails-bar-topic" -> (col("rails") === "BANK_RAILS_BAR")))
+      .routed(t.merged)
       .groupBy(col("topic"))
       .agg(count(lit(1)).as("n"), round(sum(col("amount")) / 100.0, 2).as("total"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet

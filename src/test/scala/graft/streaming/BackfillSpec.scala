@@ -31,11 +31,10 @@ class BackfillSpec extends AnyFunSuite with SparkSpec {
       events.toDF().coalesce(1).write.mode("append").parquet(in)
 
     def runOnce(): Unit = {
-      val payments      = spark.readStream.schema(schema).parquet(in)
-      val supported     = PaymentOps.railsFilter(payments)
-      val Seq(gbp, usd) = PaymentOps.branchByCurrency(supported)
-      val merged        = PaymentOps.merge(gbp, PaymentOps.fxConvert(usd))
-      val q = merged.writeStream
+      val payments = spark.readStream.schema(schema).parquet(in)
+      val q = PaymentOps
+        .merged(payments)
+        .writeStream
         .trigger(Trigger.AvailableNow()) // process everything, then STOP
         .option("checkpointLocation", s"$tmp/ckpt")
         .format("parquet")

@@ -1,8 +1,6 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.model.PaymentEvent
-import graft.operators.{BalanceAggregator, PaymentOps}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -153,27 +151,5 @@ class EventStreamsSpec extends AnyFunSuite with SparkSpec {
     val a = viaWindowFns.as[(Long, Long)].collect().sorted.toSeq
     val b = viaSessionWindow.as[(Long, Long)].collect().sorted.toSeq
     assert(a.nonEmpty && a == b)
-  }
-
-  test("typed BalanceAggregator reproduces the untyped sum (Initializer/Aggregator shape)") {
-    val payments = Seq(
-      PaymentEvent("p1", 100L, "GBP", "t", "ABC", "BANK_RAILS_FOO"),
-      PaymentEvent("p2", 50L, "GBP", "t", "ABC", "BANK_RAILS_FOO"),
-      PaymentEvent("p3", 800L, "GBP", "t", "XYZ", "BANK_RAILS_BAR")
-    )
-    val typed = payments
-      .toDS()
-      .groupByKey(_.fromAccount)
-      .mapValues(_.amount)
-      .agg(BalanceAggregator.toColumn.name("balance"))
-      .collect()
-      .toMap
-    assert(typed == Map("ABC" -> 150L, "XYZ" -> 800L))
-    val untyped = PaymentOps
-      .balances(payments.toDF())
-      .as[(String, Long)]
-      .collect()
-      .toMap
-    assert(typed == untyped)
   }
 }

@@ -86,23 +86,6 @@ class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
     run2.stop()
   }
 
-  test("single-pass pipeline: one query feeds both sinks and the balance store") {
-    implicit val sqlCtx = spark.sqlContext
-    val input          = MemoryStream[PaymentEvent]
-    val tmp            = Files.createTempDirectory("graft-single").toString
-    val (query, store) = PaymentPipeline.startSinglePass(input.toDF(), s"$tmp/ckpt", s"$tmp/sink")
-
-    input.addData(golden: _*)
-    query.processAllAvailable()
-    input.addData(PaymentEvent("p6", 40L, "GBP", "DEF", "ABC", "BANK_RAILS_FOO"))
-    query.processAllAvailable()
-
-    assert(store.get("ABC").contains(250L) && store.get("XYZ").contains(800L) && store.get("DEF").isEmpty)
-    val sunk = spark.read.parquet(s"$tmp/sink")
-    assert(sunk.count() == 5) // p1-p3, p5 FX'd, p6; p4 dropped
-    query.stop()
-  }
-
   test("changelog stores are idempotent to crash-replayed batches (same batch_id re-appended)") {
     val tmp   = Files.createTempDirectory("graft-replay").toString
     val total = new PaymentPipeline.BalanceStore(spark, s"$tmp/totals")
@@ -111,14 +94,6 @@ class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
     total.append(batch, 0L) // replay: identical rows, same batch_id
     total.append(Seq(("ABC", 250L)).toDF("fromAccount", "balance"), 1L)
     assert(total.get("ABC").contains(250L), "last-wins read must ignore the replay")
-
-    val delta = new PaymentPipeline.DeltaBalanceStore(spark, s"$tmp/deltas")
-    val d0    = Seq(("XYZ", 800L)).toDF("fromAccount", "delta")
-    delta.append(d0, 0L)
-    delta.append(d0, 0L) // replay must NOT double-count
-    delta.append(Seq(("XYZ", 40L)).toDF("fromAccount", "delta"), 1L)
-    assert(delta.get("XYZ").contains(840L))
-    assert(delta.get("NOPE").isEmpty)
   }
 
   test("changelog compaction bounds the store's read path across many batches") {
@@ -155,58 +130,36 @@ class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
     topo.stop()
   }
 
-  test("parallel compaction (compactPartitions > 1): same logical table, bounded files") {
-    // the read path must be unchanged by HOW the rewrite is parallelized:
-    // a 4-way key-hash repartitioned compact serves the exact snapshot the
-    // single-file compact would, with at most compactPartitions data files
-    val tmp = Files.createTempDirectory("graft-compact-par").toString
-    val store = new PaymentPipeline.BalanceStore(
-      spark, s"$tmp/totals", compactEvery = 0L, compactPartitions = 4)
+  test("compaction to one file keeps the logical table") {
+    // the read path must be unchanged by the rewrite: the compacted single
+    // file serves the exact snapshot the un-compacted appends did
+    val tmp   = Files.createTempDirectory("graft-compact-one").toString
+    val store = new PaymentPipeline.BalanceStore(spark, s"$tmp/totals", compactEvery = 0L)
     (0L to 9L).foreach { b =>
       store.append(Seq((s"A$b", 10L * b), ("SHARED", 100L * b)).toDF("fromAccount", "balance"), b)
     }
     val before = store.snapshot
-    assert(store.dataFileCount > 4, s"fixture must start un-compacted, got ${store.dataFileCount}")
+    assert(store.dataFileCount > 1, s"fixture must start un-compacted, got ${store.dataFileCount}")
     store.compact()
-    assert(store.dataFileCount <= 4, s"expected <= 4 files, got ${store.dataFileCount}")
-    assert(store.snapshot == before, "parallel compaction must not change the logical table")
+    assert(store.dataFileCount == 1, s"expected 1 file, got ${store.dataFileCount}")
+    assert(store.snapshot == before, "compaction must not change the logical table")
     assert(store.get("SHARED").contains(900L) && store.get("A3").contains(30L))
   }
 
-  test("delta-store compaction: cutoff rides in the base tag, every mixed state reads correctly") {
-    val tmp   = Files.createTempDirectory("graft-delta-compact").toString
-    val store = new PaymentPipeline.DeltaBalanceStore(spark, s"$tmp/deltas")
-    (0L to 9L).foreach { b =>
-      store.append(Seq(("ABC", 10L), ("XYZ", 5L)).toDF("fromAccount", "delta"), b)
-    }
-    store.append(Seq(("ABC", 10L), ("XYZ", 5L)).toDF("fromAccount", "delta"), 3L) // replay pre-cutoff
-    store.compact(5L)
-    assert(store.get("ABC").contains(100L), "sum must survive compaction (and the replay)")
-    assert(store.dataFileCount <= 2, s"unbounded: ${store.dataFileCount}")
-    // replay of a KEPT batch after compaction must still dedup
-    store.append(Seq(("ABC", 10L), ("XYZ", 5L)).toDF("fromAccount", "delta"), 7L)
-    assert(store.get("XYZ").contains(50L), "post-compaction replay double-counted")
-    // the crash window: a stale pre-cutoff row lingering NEXT TO the base
-    // (compaction appended but not yet deleted) must be ignored by reads —
-    // the winning base's cutoff filter is what guarantees it
-    store.append(Seq(("ABC", 999L)).toDF("fromAccount", "delta"), 2L)
-    assert(store.get("ABC").contains(100L), "stale pre-cutoff row was double-counted")
-    // recompaction with the stale row present stays correct and re-bounds files
-    store.compact(9L)
-    assert(store.get("ABC").contains(100L) && store.get("XYZ").contains(50L))
-    assert(store.dataFileCount <= 2, s"recompaction unbounded: ${store.dataFileCount}")
-
-    // through the stream: 7 batches, compactEvery=3 -> bounded files, right sum
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[PaymentEvent]
-    val (query, s2) = PaymentPipeline.startSinglePass(input.toDF(), s"$tmp/ckpt", s"$tmp/sink", compactEvery = 3L)
-    (1 to 7).foreach { i =>
-      input.addData(PaymentEvent(s"d$i", 10L * i, "GBP", "DEF", "ACC", "BANK_RAILS_FOO"))
-      query.processAllAvailable()
-    }
-    assert(s2.get("ACC").contains((1 to 7).map(10L * _).sum), "delta balance wrong after streamed compactions")
-    assert(s2.dataFileCount <= 4, s"stream delta changelog unbounded: ${s2.dataFileCount} files")
-    query.stop()
+  test("store before its first commit: empty reads, no-op compaction") {
+    // the REST service and snapshot readers can reach the store before the
+    // balance query has committed anything — no changelog directory yet
+    val tmp   = Files.createTempDirectory("graft-empty").toString
+    val store = new PaymentPipeline.BalanceStore(spark, s"$tmp/never-written")
+    assert(store.get("ABC").isEmpty, "no committed batch must read as 404")
+    assert(store.snapshot.isEmpty)
+    val df = store.snapshotDf
+    assert(df.schema.map(f => f.name -> f.dataType.simpleString) ==
+      Seq("fromAccount" -> "string", "balance" -> "bigint"))
+    assert(df.count() == 0)
+    store.compact()
+    assert(!new java.io.File(s"$tmp/never-written").exists(), "compact must not create the store")
+    assert(store.dataFileCount == 0)
   }
 
   test("kafka codec round-trip: encode -> decode preserves the record (O1/O11/O14/O15)") {
