@@ -12,9 +12,12 @@ import org.apache.spark.sql.types.LongType
   *
   * Scale notes (100 TB): every operator here is a narrow, stateless,
   * whole-stage-codegen-friendly transformation — filters and projections that
-  * Catalyst pushes into the parquet scan, a `when`-chain tag for branching
-  * (one pass, no re-scan per branch), and a `unionByName` that adds no
-  * shuffle. The only shuffle in the whole topology is the one the semantics
+  * Catalyst pushes into the parquet scan, a `when`-chain tag for branching,
+  * and a `unionByName` that adds no shuffle. Catalyst does not fold a
+  * self-union, so branches split into frames and merged back read their
+  * input once per branch; the chain every consumer runs, [[merged]],
+  * therefore fuses O4–O6 into one filter and one projection over a single
+  * scan. The only shuffle in the whole topology is the one the semantics
   * require: the groupBy in [[balances]] (the reference's repartition topic,
   * `PaymentTopology.java:76-77`).
   */
@@ -54,8 +57,10 @@ object PaymentOps {
   }
 
   /** Materialize the tagged branches as separate DataFrames (the reference's
-    * `KStream[]` shape). Prefer consuming the single tagged frame (one scan,
-    * e.g. a partitioned write); use this only when branches truly diverge.
+    * `KStream[]` shape). Each returned frame is its own scan of `df` once the
+    * branches are re-joined (a union or join of them reads the input once per
+    * branch). Prefer consuming the single tagged frame (one scan, e.g. a
+    * partitioned write); use this only when branches truly diverge.
     */
   def splitBranches(df: DataFrame, tagCol: String, branches: Seq[(String, Column)]): Seq[DataFrame] = {
     val tagged = branchFirstMatch(df, tagCol, branches)
@@ -93,13 +98,17 @@ object PaymentOps {
     * negative exact-.5 points: Math.round(-2.5) = -2, HALF_UP gives -3.
     * See PaymentOpsSpec for both boundary regressions.)
     */
-  def fxConvert(df: DataFrame, rate: Double = UsdToGbpRate): DataFrame = {
-    val x = col("amount") * lit(rate)
-    val f = floor(x) // LongType
-    df.withColumn(
-        "amount",
-        (f + when(x - f.cast("double") >= 0.5, lit(1L)).otherwise(lit(0L))).cast(LongType))
+  def fxConvert(df: DataFrame, rate: Double = UsdToGbpRate): DataFrame =
+    df.withColumn("amount", fxAmount(col("amount"), rate))
       .withColumn("currency", lit(Currency.GBP))
+
+  /** `Math.round(amount * rate)` as a LongType column — the exact form
+    * documented on [[fxConvert]], shared by [[fxConvert]] and [[merged]].
+    */
+  def fxAmount(amount: Column, rate: Double): Column = {
+    val x = amount * lit(rate)
+    val f = floor(x) // LongType
+    (f + when(x - f.cast("double") >= 0.5, lit(1L)).otherwise(lit(0L))).cast(LongType)
   }
 
   /** O6 — merge (UNION ALL, order-free, no dedup). Reference
@@ -120,11 +129,22 @@ object PaymentOps {
   /** O3→O6 — the chain every payment consumer starts from: rails filter,
     * currency branch, FX on the USD branch, merge. Reference
     * `PaymentTopology.java:45-72`.
+    *
+    * Spelled as one pass, not as `merge(gbp, fxConvert(usd))` over
+    * [[branchByCurrency]]: that union of two filtered frames plans as two
+    * scans of the same input. Here the branch is the filter
+    * `currency IN (GBP, USD)` (null and unknown currencies dropped, as
+    * `KStream#branch` drops no-match records), FX applies under
+    * `currency = USD`, and every surviving row is GBP — the same multiset
+    * of rows as the union (PaymentOpsSpec checks the two forms agree).
     */
-  def merged(payments: DataFrame): DataFrame = {
-    val Seq(gbp, usd) = branchByCurrency(railsFilter(payments))
-    merge(gbp, fxConvert(usd))
-  }
+  def merged(payments: DataFrame): DataFrame =
+    railsFilter(payments)
+      .filter(col("currency").isin(Currency.GBP, Currency.USD))
+      .withColumn(
+        "amount",
+        when(col("currency") === Currency.USD, fxAmount(col("amount"), UsdToGbpRate)).otherwise(col("amount")))
+      .withColumn("currency", lit(Currency.GBP))
 
   /** O10+O11 — the merged stream tagged with its outbound topic in a
     * `topic` column: FOO rails → `rails-foo-topic`, BAR rails →

@@ -21,6 +21,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *     as ONE tagged stream written per-branch in a single pass
   *     (`PaymentTopology.java:90-97`).
   *
+  * The routing sink and the balance aggregation are two queries, and each
+  * plans [[PaymentOps.merged]] as a single scan of the source, so every
+  * micro-batch is read and decoded twice: once per query.
+  *
   * Scale notes (100 TB/day stream): state is per-`fromAccount` running sums —
   * Spark's streaming state store partitions it by the shuffle hash of the
   * group key across `spark.sql.shuffle.partitions` tasks; for wide key spaces
@@ -188,8 +192,8 @@ object PaymentPipeline {
     *
     * @param sinkDir  rows routed to the FOO/BAR "topics" land in
     *                 `sinkDir/topic=rails-foo-topic/` etc. as parquet —
-    *                 one partitioned write per micro-batch (single pass over
-    *                 the tagged union, no per-branch re-scan).
+    *                 one partitioned write per micro-batch (one scan of the
+    *                 source, no per-branch re-scan).
     * @param compactEvery balance-changelog compaction cadence (batches);
     *                 see [[BalanceStore]].
     */

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import graft.model.PaymentEvent
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -90,6 +91,47 @@ class PaymentOpsSpec extends AnyFunSuite with SparkSpec {
     // no-match drop:
     val dropped = PaymentOps.branchFirstMatch(golden, "b", Seq("none" -> (col("amount") < 0)))
     assert(dropped.count() == 0)
+  }
+
+  // RDD-backed (not a LocalRelation Catalyst could fold) and null-bearing:
+  // the edge rows every form of the O3→O6 chain must treat alike.
+  private def edges: DataFrame = {
+    val bigOdd = (1L << 52) + 1L
+    def r(id: String, amount: java.lang.Long, currency: String, rails: String) =
+      Row(id, amount, currency, "DEF", s"acct-$id", rails)
+    val rows = Seq(
+      r("g1", 100L, "GBP", "BANK_RAILS_FOO"),
+      r("g1", 100L, "GBP", "BANK_RAILS_FOO"), // duplicate: multiset, not set
+      r("g2", null, "GBP", "BANK_RAILS_BAR"),
+      r("u1", 1000L, "USD", "BANK_RAILS_BAR"),
+      r("u2", 5L, "USD", "BANK_RAILS_FOO"), // the exact-.5 amounts of the
+      r("u3", -5L, "USD", "BANK_RAILS_BAR"), // fxConvert tests above
+      r("u4", 13L, "USD", "BANK_RAILS_FOO"),
+      r("u5", bigOdd, "USD", "BANK_RAILS_BAR"), // odd integer above 2^52
+      r("u6", null, "USD", "BANK_RAILS_FOO"),
+      r("n1", 7L, null, "BANK_RAILS_FOO"),
+      r("e1", 9L, "EUR", "BANK_RAILS_BAR"),
+      r("r1", 11L, "GBP", null),
+      r("x1", 1200L, "USD", "BANK_RAILS_XXX")
+    )
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), PaymentEvent.schema)
+  }
+
+  test("merged (one pass) equals merge(gbp, fxConvert(usd)) as multisets") {
+    val Seq(gbp, usd) = PaymentOps.branchByCurrency(PaymentOps.railsFilter(edges))
+    val union         = PaymentOps.merge(gbp, PaymentOps.fxConvert(usd))
+    val single        = PaymentOps.merged(edges)
+    def shape(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    assert(shape(single) == shape(union), "column names, order or types differ")
+    assert(single.count() == union.count())
+    assert(single.count() == 9L, "null/EUR currency, null rails and XXX rows must drop")
+    assert(single.exceptAll(union).isEmpty, "rows only in the one-pass form")
+    assert(union.exceptAll(single).isEmpty, "rows only in the union form")
+  }
+
+  test("merged plans one scan of its input (no self-union)") {
+    val leaves = PaymentOps.merged(edges).queryExecution.optimizedPlan.collectLeaves()
+    assert(leaves.size == 1, s"expected one leaf, got ${leaves.size}: ${leaves.map(_.nodeName)}")
   }
 
   test("full topology: balances ABC=210, XYZ=800, DEF absent (PaymentTopologyTest.java:142-145)") {

@@ -2,7 +2,8 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.model.{PaymentEvent, PaymentSerde}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -55,6 +56,24 @@ class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
     assert(topo.store.get("XYZ").contains(800L))
 
     topo.stop()
+  }
+
+  test("each of start's two queries scans the source once per batch") {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[PaymentEvent]
+    val tmp   = Files.createTempDirectory("graft-scan").toString
+    val topo  = PaymentPipeline.start(input.toDF(), s"$tmp/ckpt", s"$tmp/sink")
+    try {
+      input.addData(golden: _*)
+      topo.processAllAvailable()
+      for (q <- Seq(topo.routing, topo.balance)) {
+        val plan   = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+        val leaves = plan.collectLeaves()
+        assert(
+          leaves.size == 1 && leaves.forall(_.isInstanceOf[MicroBatchScanExec]),
+          s"${q.name}: expected one source scan, got ${leaves.map(_.nodeName)}")
+      }
+    } finally topo.stop()
   }
 
   test("restart from checkpoint recovers state and does not re-emit committed batches") {
