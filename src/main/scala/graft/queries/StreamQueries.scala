@@ -916,7 +916,7 @@ object StreamQueries {
     "q174_payment_topology_stream" -> ((s, dir) => {
       val in  = paymentsMemo(s, dir)
       val tmp = freshTmp("pay")
-      withStatePartitions(s) {
+      val store = withStatePartitions(s) {
         val stream = s.readStream
           .schema(s.read.parquet(in).schema)
           .option("maxFilesPerTrigger", "1")
@@ -924,8 +924,9 @@ object StreamQueries {
         val rt = graft.streaming.PaymentPipeline.start(stream, s"$tmp/ckpt", s"$tmp/sink")
         try rt.processAllAvailable()
         finally rt.stop()
+        rt.store
       }
-      new graft.streaming.PaymentPipeline.BalanceStore(s, s"$tmp/sink/_balance_state").snapshotDf
+      store.snapshotDf
         .select(col("fromAccount").as("from_account"), col("balance").as("balance_cents"))
         .orderBy(col("from_account"))
     }),

@@ -8,12 +8,11 @@ import java.nio.charset.StandardCharsets
 /** The reference's interactive-query HTTP surface, re-expressed over the
   * streaming state this engine maintains:
   *
-  *   - `GET /v1/kafka-streams/balance/{account}` — point lookup against the
-  *     [[PaymentPipeline.BalanceStore]] changelog that
-  *     [[PaymentPipeline.start]] maintains (the one payment path); absent
-  *     key ⇒ HTTP 404, present ⇒ 200 with the Long balance as the body.
-  *     Twin of `controller/BalanceController.java:22-35` (store `get`,
-  *     null→404).
+  *   - `GET /v1/kafka-streams/balance/{account}` — point lookup in the
+  *     [[PaymentPipeline.BalanceStore]] index that [[PaymentPipeline.start]]
+  *     maintains (the one payment path); absent key ⇒ HTTP 404, present ⇒
+  *     200 with the Long balance as the body. Twin of
+  *     `controller/BalanceController.java:22-35` (store `get`, null→404).
   *   - `GET /v1/kafka-streams/topology` — the current plan text, twin of
   *     `controller/TopologyController.java:20-23` (`Topology#describe`).
   *   - `GET /v1/kafka-streams/dim/{user}?at=T` — the BalanceController
@@ -25,14 +24,12 @@ import java.nio.charset.StandardCharsets
   *
   * Built on the JDK's `com.sun.net.httpserver` so the library adds no HTTP
   * dependency; a production deployment would front the same two functions
-  * with its own stack. The handler threads only run the store's point-lookup
-  * SQL (a pushed-down parquet filter) — the same worker-thread-reads-
-  * streams-thread-state shape (and eventual-consistency window) the
-  * reference's integration test tolerates
-  * (`KafkaStreamsPaymentIntegrationTest.java:185-204`). Those lookups run
-  * on a 4-thread pool BESIDE the balance stream, so one can race the
-  * store's compaction and be answered 500 — the open defect described on
-  * [[PaymentPipeline.BalanceStore]] (ROADMAP open item 2).
+  * with its own stack. The handler threads read the store's in-memory
+  * index, which the balance stream's thread republishes after each batch —
+  * the same worker-thread-reads-streams-thread-state shape (and
+  * eventual-consistency window) the reference's integration test tolerates
+  * (`KafkaStreamsPaymentIntegrationTest.java:185-204`). A balance lookup
+  * starts no Spark job and touches no file.
   */
 final class RestService(
     getBalance: String => Option[Long],
@@ -44,7 +41,8 @@ final class RestService(
   private val server: HttpServer = HttpServer.create(new InetSocketAddress(port), 0)
 
   // Small worker pool: without one the JDK server runs every handler on its
-  // single dispatcher thread, serializing all lookups behind one Spark job.
+  // single dispatcher thread, serializing all requests behind one dim
+  // lookup's Spark job.
   // Daemon threads so an un-stopped service never pins the JVM.
   private val pool = java.util.concurrent.Executors.newFixedThreadPool(
     4,

@@ -4,10 +4,12 @@ import graft.SparkSpec
 import graft.model.{PaymentEvent, PaymentSerde}
 import org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec
 import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** Tier-2 streaming parity — the reference's integration scenario
   * (`KafkaStreamsPaymentIntegrationTest.java:150-204`) run through
@@ -79,24 +81,36 @@ class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
   test("restart from checkpoint recovers state and does not re-emit committed batches") {
     // The reference gets this from Kafka Streams' changelog-topic restore
     // (RocksDB state rebuilt on rebalance/restart); the Spark twin is
-    // checkpoint recovery: offsets + state-store versions. Same source
-    // instance, same checkpoint — stop, restart, feed more data.
+    // checkpoint recovery: offsets + state-store versions, plus the store's
+    // index rebuilt from its changelog. Same source instance, same
+    // checkpoint — stop, restart, feed more data. compactEvery = 2 and four
+    // batches before the stop: batch 2 compacts the changelog and batch 3
+    // appends to it, so the restart rebuilds from a compacted-then-appended
+    // changelog.
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[PaymentEvent]
     val tmp   = Files.createTempDirectory("graft-restart").toString
 
-    val run1 = PaymentPipeline.start(input.toDF(), s"$tmp/ckpt", s"$tmp/sink")
+    val run1 = PaymentPipeline.start(input.toDF(), s"$tmp/ckpt", s"$tmp/sink", compactEvery = 2L)
     input.addData(golden: _*)
     run1.processAllAvailable()
     assert(run1.store.get("ABC").contains(210L))
+    (1 to 3).foreach { i =>
+      input.addData(PaymentEvent(s"q$i", 10L * i, "GBP", "DEF", "QQQ", "BANK_RAILS_BAR"))
+      run1.processAllAvailable()
+    }
+    assert(run1.store.get("QQQ").contains(60L))
     run1.stop()
 
-    val run2 = PaymentPipeline.start(input.toDF(), s"$tmp/ckpt", s"$tmp/sink")
+    val run2 = PaymentPipeline.start(input.toDF(), s"$tmp/ckpt", s"$tmp/sink", compactEvery = 2L)
+    assert(run2.store.snapshot == Map("ABC" -> 210L, "XYZ" -> 800L, "QQQ" -> 60L),
+      s"index not rebuilt from the changelog: ${run2.store.snapshot}")
     input.addData(PaymentEvent("p7", 30L, "GBP", "DEF", "ABC", "BANK_RAILS_FOO"))
     run2.processAllAvailable()
     // State recovered: 210 from before the restart + 30 — NOT 30 from zero.
     assert(run2.store.get("ABC").contains(240L), s"got ${run2.store.get("ABC")}")
     assert(run2.store.get("XYZ").contains(800L), "untouched key lost across restart")
+    assert(run2.store.get("QQQ").contains(60L), "key last written after a compaction lost across restart")
 
     // Committed batches are not re-emitted: p1 still routed exactly once.
     val foo = spark.read.parquet(s"$tmp/sink").filter($"topic" === "rails-foo-topic")
@@ -113,6 +127,9 @@ class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
     total.append(batch, 0L) // replay: identical rows, same batch_id
     total.append(Seq(("ABC", 250L)).toDF("fromAccount", "balance"), 1L)
     assert(total.get("ABC").contains(250L), "last-wins read must ignore the replay")
+    // the same rule at the file level: recovery reads the changelog
+    val reopened = new PaymentPipeline.BalanceStore(spark, s"$tmp/totals")
+    assert(reopened.snapshot == Map("ABC" -> 250L), s"recovered ${reopened.snapshot}")
   }
 
   test("changelog compaction bounds the store's read path across many batches") {
@@ -135,6 +152,10 @@ class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
     // last append was batch 12 -> compaction just ran: exactly the compacted
     // file(s) remain. Without compaction this directory would hold 13 appends.
     assert(store.dataFileCount <= 2, s"unbounded changelog: ${store.dataFileCount} files")
+    // the compacted files hold the same table: recover it from them
+    val reopened = new PaymentPipeline.BalanceStore(spark, s"$tmp/totals", compactEvery = 4L)
+    assert(reopened.snapshot == Map("ABC" -> 1300L, "XYZ" -> 1100L, "DEF" -> 1200L),
+      s"recovered ${reopened.snapshot}")
 
     // And through the actual stream: 7 micro-batches, compactEvery=3.
     implicit val sqlCtx = spark.sqlContext
@@ -147,6 +168,8 @@ class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
     assert(topo.store.get("ACC").contains((1 to 7).map(10L * _).sum), "balance wrong after streamed compactions")
     assert(topo.store.dataFileCount <= 4, s"stream changelog unbounded: ${topo.store.dataFileCount} files")
     topo.stop()
+    val streamed = new PaymentPipeline.BalanceStore(spark, s"$tmp/sink/_balance_state")
+    assert(streamed.get("ACC").contains((1 to 7).map(10L * _).sum), "streamed changelog recovers a wrong balance")
   }
 
   test("compaction to one file keeps the logical table") {
@@ -159,10 +182,103 @@ class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
     }
     val before = store.snapshot
     assert(store.dataFileCount > 1, s"fixture must start un-compacted, got ${store.dataFileCount}")
+    def recovered = new PaymentPipeline.BalanceStore(spark, s"$tmp/totals", compactEvery = 0L)
+    assert(recovered.snapshot == before, "the un-compacted changelog must recover the served table")
     store.compact()
     assert(store.dataFileCount == 1, s"expected 1 file, got ${store.dataFileCount}")
     assert(store.snapshot == before, "compaction must not change the logical table")
     assert(store.get("SHARED").contains(900L) && store.get("A3").contains(30L))
+    val after = recovered
+    assert(after.snapshot == before, "compaction must not change the recovered table")
+    assert(after.get("SHARED").contains(900L) && after.get("A3").contains(30L))
+  }
+
+  test("a payment with no amount leaves its new account absent, never a failed read") {
+    // PERMISSIVE decode: a Kafka-wire record without `amount` passes the
+    // rails filter with a null amount, so its new account's update row is
+    // (account, null). It must read as absent in get and snapshot alike.
+    implicit val sqlCtx = spark.sqlContext
+    val wire = MemoryStream[(String, String)]
+    val tmp  = Files.createTempDirectory("graft-null-amount").toString
+    val topo = PaymentPipeline.start(
+      PaymentSerde.decodeKafka(wire.toDF().toDF("key", "value")), s"$tmp/ckpt", s"$tmp/sink")
+    def record(id: String, from: String, amount: String) =
+      id -> s"""{"paymentId":"$id",$amount"currency":"GBP","toAccount":"t","fromAccount":"$from","rails":"BANK_RAILS_FOO"}"""
+    try {
+      wire.addData(record("n1", "NUL", ""), record("n2", "OK", "\"amount\":5,"))
+      topo.processAllAvailable()
+      assert(topo.store.get("NUL").isEmpty, "a null balance must read as absent")
+      assert(topo.store.snapshot == Map("OK" -> 5L))
+      // a later real amount makes the account present
+      wire.addData(record("n3", "NUL", "\"amount\":7,"))
+      topo.processAllAvailable()
+      assert(topo.store.get("NUL").contains(7L))
+      assert(topo.store.snapshot == Map("OK" -> 5L, "NUL" -> 7L))
+    } finally topo.stop()
+  }
+
+  test("lookups beside appends and compactions see only published balances") {
+    // 4 readers loop on get while the writer appends and compacts after
+    // every batch (compactEvery = 1): a read must neither fail nor see a
+    // value no batch published.
+    val tmp   = Files.createTempDirectory("graft-race").toString
+    val store = new PaymentPipeline.BalanceStore(spark, s"$tmp/totals", compactEvery = 1L)
+    def value(b: Long) = 100L * (b + 1)
+    store.append(Seq(("ABC", value(0))).toDF("fromAccount", "balance"), 0L)
+    val batches = 12L
+    @volatile var writing = true
+    val seen    = java.util.concurrent.ConcurrentHashMap.newKeySet[Option[Long]]()
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val readers = (1 to 4).map { _ =>
+      val t = new Thread(() =>
+        try while (writing) seen.add(store.get("ABC"))
+        catch { case e: Throwable => failure.compareAndSet(null, e) })
+      t.start()
+      t
+    }
+    try (1L to batches).foreach(b => store.append(Seq(("ABC", value(b))).toDF("fromAccount", "balance"), b))
+    finally {
+      writing = false
+      readers.foreach(_.join())
+    }
+    assert(failure.get == null, s"a lookup failed beside compaction: ${failure.get}")
+    val published = (0L to batches).map(b => Option(value(b))).toSet
+    val answers   = seen.asScala.toSet
+    assert(answers.nonEmpty && answers.subsetOf(published), s"unpublished answers: ${answers -- published}")
+    assert(store.get("ABC").contains(value(batches)))
+  }
+
+  test("get and snapshot start no Spark job") {
+    val tmp   = Files.createTempDirectory("graft-nojob").toString
+    val store = new PaymentPipeline.BalanceStore(spark, s"$tmp/totals")
+    store.append(Seq(("ABC", 210L), ("XYZ", 800L)).toDF("fromAccount", "balance"), 0L)
+    // Count the jobs this thread starts under one job group. The listener
+    // bus delivers events in order, so once a marker job started after the
+    // reads has been seen, every job the reads started has been counted.
+    val jobs   = new java.util.concurrent.atomic.AtomicInteger(0)
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("graft-nojob-reads")  => jobs.incrementAndGet()
+          case Some("graft-nojob-marker") => marker.countDown()
+          case _                          => ()
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup("graft-nojob-reads", "reads")
+      (1 to 100).foreach(i => store.get(if (i % 2 == 0) "ABC" else "NOPE"))
+      val snap = store.snapshot
+      spark.sparkContext.setJobGroup("graft-nojob-marker", "marker")
+      spark.range(1).count()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job never seen")
+      assert(snap == Map("ABC" -> 210L, "XYZ" -> 800L))
+      assert(jobs.get == 0, s"reads started ${jobs.get} Spark jobs")
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
   }
 
   test("store before its first commit: empty reads, no-op compaction") {
