@@ -165,8 +165,9 @@ object PaymentOps {
     * initializer 0L, aggregator agg+value, no window, no TTL).
     *
     * Batch: a plain hash aggregate (partial map-side combine + one shuffle).
-    * Streaming: run with `outputMode("update")` — each micro-batch emits the
-    * updated per-key sums exactly like the KTable changelog.
+    * Streaming: `PaymentPipeline.start` runs it on each micro-batch, with no
+    * state store, and its `BalanceStore` folds the per-batch sums into the
+    * running balances.
     */
   def balances(df: DataFrame): DataFrame =
     rekeyToAccountAmount(df)

@@ -902,7 +902,8 @@ object StreamQueries {
 
     // THE REFERENCE'S FLAGSHIP TOPOLOGY under the streaming byte gate
     // (reference `PaymentTopology.java:39-98`): rails filter → currency
-    // branch → FX → merge → UPDATE-MODE balance aggregation, executed by
+    // branch → FX → merge → balance aggregation (per-batch sums folded into
+    // running balances by the BalanceStore), executed by
     // `PaymentPipeline.start` itself as real StreamingQueries over a
     // multi-batch file source (`maxFilesPerTrigger=1` → one micro-batch per
     // input file, so the changelog genuinely re-emits updated keys across

@@ -5,62 +5,68 @@ import graft.operators.PaymentOps
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 /** Structured-Streaming twin of the reference's runtime
   * (`processor/PaymentTopology.java:39-98` wired by
   * `KafkaStreamsDemoConfiguration.java:34-48`), and the engine's one
   * payment path: [[start]] → [[BalanceStore]] → [[RestService]]. It runs
   * the chain [[PaymentOps.merged]] over an unbounded source, with
-  *   - the balance KTable as a `groupBy.sum` in **update** output mode
-  *     (each micro-batch emits only the keys whose sum changed — exactly the
-  *     KTable changelog contract, `PaymentTopology.java:78-88`);
-  *   - queryable state ([[BalanceStore]]) maintained by a `foreachBatch`
-  *     upsert, standing in for the reference's interactive-query store
+  *   - the balance KTable (`PaymentTopology.java:78-88`) held once, in
+  *     [[BalanceStore]]: a stateless `foreachBatch` query hands it each
+  *     micro-batch's per-account sums, which it folds into running balances,
+  *     logs to its parquet changelog and serves, standing in for the
+  *     reference's interactive-query store
   *     (`controller/BalanceController.java:24-33`) — SURVEY.md §7.4 Hard #1;
   *   - sink routing for the FOO/BAR outbound topics ([[PaymentOps.routed]])
   *     as ONE tagged stream written per-branch in a single pass
   *     (`PaymentTopology.java:90-97`).
   *
-  * The routing sink and the balance aggregation are two queries, and each
-  * plans [[PaymentOps.merged]] as a single scan of the source, so every
-  * micro-batch is read and decoded twice: once per query.
+  * The routing sink and the balance query are two queries, and each plans
+  * [[PaymentOps.merged]] as a single scan of the source, so every
+  * micro-batch is read and decoded twice: once per query. Neither query
+  * keeps Spark state.
   *
-  * Scale notes (100 TB/day stream): state is per-`fromAccount` running sums —
-  * Spark's streaming state store partitions it by the shuffle hash of the
-  * group key across `spark.sql.shuffle.partitions` tasks; for wide key spaces
-  * use the RocksDB provider
-  * (`spark.sql.streaming.stateStore.providerClass=...RocksDBStateStoreProvider`)
-  * exactly as the reference leans on RocksDB. Queryable state, like the
-  * reference's instance-local store, lives in this process: each
-  * micro-batch's changed keys are appended to a parquet changelog stamped
-  * with the batchId, then collected to the driver and folded into the
-  * in-memory index that lookups read. The driver's heap therefore holds one
-  * entry per account; a deployment past that size would shard the index by
-  * key across instances, as Kafka Streams shards its stores by partition.
+  * Scale notes: the balance table, like the reference's instance-local
+  * store, lives in this process. Each micro-batch's sums are collected to
+  * the driver, folded into the in-memory index that lookups read, and the
+  * changed keys' running balances are appended to a parquet changelog
+  * stamped with the batchId. The driver's heap therefore holds one entry per
+  * account; a deployment past that size would shard the index by key across
+  * instances, as Kafka Streams shards its stores by partition.
   */
 object PaymentPipeline {
 
   /** Queryable per-account balance state — the Spark stand-in for
-    * `kafkaStreams.store("balance", keyValueStore())`. Served state lives
-    * on the driver: one immutable `Map` in a volatile field, the twin of the
-    * reference's instance-local store (`BalanceController.java:24-33`).
-    * [[get]] and [[snapshot]] read it and start no Spark job.
+    * `kafkaStreams.store("balance", keyValueStore())`, and the only copy of
+    * the balance table. Served state lives on the driver: one immutable
+    * `Map` in a volatile field, the twin of the reference's instance-local
+    * store (`BalanceController.java:24-33`). [[get]] and [[snapshot]] read
+    * it and start no Spark job.
     *
-    * The balance query's `foreachBatch` hands [[append]] exactly the keys
-    * that changed. [[append]] appends them durably to a parquet changelog
-    * (`fromAccount`, `balance`, `batch_id`), collects them, and only then
-    * publishes `index ++ changed` with one volatile write: durable first,
-    * visible second, the idempotent-sink order. A reader sees the state
+    * The balance query's `foreachBatch` hands [[append]] one micro-batch's
+    * per-account sums (deltas). [[append]] collects them in one job, folds
+    * `index(a) + delta` into running balances for the changed keys, appends
+    * those running balances durably to a parquet changelog (`fromAccount`,
+    * `balance`, `batch_id`), and only then publishes the new index with one
+    * volatile write: durable first, visible second. A reader sees the state
     * after some whole batch (the eventual-consistency window the reference
     * tests tolerate, `KafkaStreamsPaymentIntegrationTest.java:185-188`).
     *
     * The changelog is the recovery log: a new store rebuilds its index from
-    * the changelog's latest row per key (max `batch_id` wins, so a
-    * crash-replayed batch, re-appended under its batch_id, changes nothing).
-    * Every `compactEvery` batches the changelog is rewritten to that
-    * latest-per-key table, which bounds its files and so the restart's
-    * rebuild. No reader lists files while the stream runs, so compaction
-    * deleting files races with no lookup.
+    * the changelog's latest row per key (max `batch_id` wins). A delta fold
+    * is not idempotent, so the store keeps one invariant: the changelog can
+    * rebuild the state before its last batch P as well as the state after
+    * it, and both are kept in memory. Spark replays P when P's append landed
+    * (possibly only in part: a multi-file job commit is not atomic) but its
+    * commit-log entry did not; [[append]] then folds P onto the state before
+    * it, and re-appends rows identical to those that landed, so last-wins
+    * recovery is unaffected. Every `compactEvery` batches the changelog is
+    * rewritten to its latest-per-key table, which bounds its files and so the
+    * restart's rebuild. Compaction runs at the start of a due batch, before
+    * its append, and never on a replay, so it never collapses the rows of a
+    * batch that can still replay. No reader lists files while the stream
+    * runs, so compaction deleting files races with no lookup.
     *
     * A null balance (an account whose only amounts decoded to null) reads
     * as absent.
@@ -92,8 +98,20 @@ object PaymentPipeline {
         if (r.isNullAt(1)) m - r.getString(0) else m.updated(r.getString(0), r.getLong(1))
       }
 
-    @volatile private var index: Map[String, Long] =
-      folded(Map.empty, changelog.fold(Array.empty[Row])(latest(_).collect()))
+    // The changelog's last batch P (-1 before the first) and the table
+    // before it, which a replay of P folds onto. Only append writes them.
+    private var last: Long = -1L
+    private var prior: Map[String, Long] = Map.empty
+    @volatile private var index: Map[String, Long] = Map.empty
+
+    changelog.foreach { log =>
+      val top = log.agg(max(col("batch_id"))).head()
+      if (!top.isNullAt(0)) {
+        last = top.getLong(0)
+        prior = folded(Map.empty, latest(log.filter(col("batch_id") < last)).collect())
+        index = folded(prior, log.filter(col("batch_id") === last).collect())
+      }
+    }
 
     /** `GET /balance/{account}`: None ⇒ the reference's HTTP 404
       * (`BalanceController.java:29-33`).
@@ -114,16 +132,28 @@ object PaymentPipeline {
     /** Full current state: the served index itself. */
     def snapshot: Map[String, Long] = index
 
-    private[streaming] def append(batch: Dataset[Row], batchId: Long): Unit = {
-      // Persisted: a second action on the foreachBatch frame would re-run
-      // the stateful aggregation, so the write evaluates the batch once and
-      // the collect reads the cached rows.
-      val changed = batch.select(col("fromAccount"), col("balance"), lit(batchId).as("batch_id")).persist()
-      try {
-        changed.write.mode("append").parquet(dir)
-        index = folded(index, changed.collect())
-      } finally changed.unpersist()
-      if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) compact()
+    /** Fold one batch's `(fromAccount, balance)` sums into the table (see
+      * class doc). A null sum leaves its account's balance as it was.
+      */
+    private[streaming] def append(sums: Dataset[Row], batchId: Long): Unit = {
+      require(batchId >= last, s"batch $batchId precedes the changelog's last batch $last")
+      val replay = batchId == last
+      if (!replay && compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) compact()
+      val base = if (replay) prior else index
+      val rows = sums.select(col("fromAccount"), col("balance")).collect().map { r =>
+        val account = r.getString(0)
+        val balance: java.lang.Long =
+          if (r.isNullAt(1)) base.get(account).map(Long.box).orNull
+          else base.getOrElse(account, 0L) + r.getLong(1)
+        Row(account, balance, batchId)
+      }
+      if (rows.nonEmpty) {
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType.fromDDL(schema))
+          .write.mode("append").parquet(dir)
+        last = batchId
+        prior = base
+        index = folded(base, rows)
+      }
     }
 
     /** Rewrite the changelog to latest-per-key (see class doc). Safe order:
@@ -182,8 +212,11 @@ object PaymentPipeline {
   /** Wire the full reference topology over a streaming payment DataFrame
     * (from [[fromKafka]], a MemoryStream, or any streaming source with the
     * payment schema) as two queries over the same source: the exactly-once
-    * routing sink and the update-mode balance aggregation feeding the
-    * [[BalanceStore]]. A tick is visible once both have committed.
+    * routing sink and a stateless balance query that hands each batch's
+    * per-account sums to the [[BalanceStore]], the one copy of the balance
+    * table. A tick is visible once both have committed. Neither query
+    * plans a stateful operator, so no state store pins
+    * `spark.sql.shuffle.partitions` across restarts.
     *
     * @param sinkDir  rows routed to the FOO/BAR "topics" land in
     *                 `sinkDir/topic=rails-foo-topic/` etc. as parquet —
@@ -219,17 +252,17 @@ object PaymentPipeline {
       .partitionBy("topic")
       .start()
 
-    // O8+O9 — update-mode grouped sum; foreachBatch receives exactly the
-    // changed keys per batch (the KTable changelog), which the store logs
-    // and then serves.
+    // O7–O9 — re-key in the streaming plan, so Catalyst prunes the decode
+    // to the two columns the sum reads; then a stateless per-batch grouped
+    // sum, which the store folds into the running balances (the KTable),
+    // logs and then serves.
     val balance = PaymentOps
-      .balances(merged)
+      .rekeyToAccountAmount(merged)
       .writeStream
       .queryName("graft-balance")
-      .outputMode("update")
       .option("checkpointLocation", s"$checkpointDir/balance")
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        store.append(batch, batchId)
+        store.append(PaymentOps.balances(batch), batchId)
         ()
       }
       .start()

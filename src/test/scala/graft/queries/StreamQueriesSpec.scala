@@ -166,7 +166,7 @@ class StreamQueriesSpec extends AnyFunSuite with SparkSpec {
       .parquet(s"$tmp/sink/_balance_state")
       .collect()
     assert(log.map(_.getLong(2)).distinct.length == 2, "one-file triggers must yield two batches")
-    // UPDATE mode: the batch that did not touch `a` must not re-emit it
+    // changed keys only: the batch that did not touch `a` must not re-emit it
     val a = log.filter(_.getString(0) == "a")
     assert(a.length == 1 && a.head.getLong(1) == 100L,
       s"`a` must emit exactly once with its sum: ${a.mkString(",")}")

@@ -16,7 +16,8 @@ import scala.jdk.CollectionConverters._
   * Structured Streaming with a MemoryStream standing in for the broker:
   * same five golden payments, asserts outbound routing totals and the
   * queryable balance store's 200/404 contract, then a SECOND batch to prove
-  * update-mode accumulation (the KTable changelog semantics).
+  * the store folds each batch's sums into running balances (the KTable
+  * changelog semantics).
   */
 class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -51,7 +52,7 @@ class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
     assert(bar.select("paymentId", "amount", "currency").as[(String, Long, String)].collect().toSeq
       == Seq(("p5", 800L, "GBP")))
 
-    // Second batch: update-mode accumulation — ABC grows, XYZ untouched.
+    // Second batch: the store accumulates — ABC grows, XYZ untouched.
     input.addData(PaymentEvent("p6", 40L, "GBP", "DEF", "ABC", "BANK_RAILS_FOO"))
     topo.processAllAvailable()
     assert(topo.store.get("ABC").contains(250L))
@@ -81,7 +82,7 @@ class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
   test("restart from checkpoint recovers state and does not re-emit committed batches") {
     // The reference gets this from Kafka Streams' changelog-topic restore
     // (RocksDB state rebuilt on rebalance/restart); the Spark twin is
-    // checkpoint recovery: offsets + state-store versions, plus the store's
+    // checkpoint recovery: the offset and commit logs, plus the store's
     // index rebuilt from its changelog. Same source instance, same
     // checkpoint — stop, restart, feed more data. compactEvery = 2 and four
     // batches before the stop: batch 2 compacts the changelog and batch 3
@@ -119,38 +120,129 @@ class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
     run2.stop()
   }
 
+  /** Leave the balance query's checkpoint as a crash between the store's
+    * append of its last batch and that batch's commit-log entry leaves it:
+    * the commit file goes, with its checksum sidecar (a sidecar without its
+    * file fails the restart). Returns the batch Spark will replay.
+    */
+  private def dropLastBalanceCommit(ckpt: String): Long = {
+    val commits = new java.io.File(s"$ckpt/balance/commits")
+    val last    = commits.list().filter(_.forall(_.isDigit)).map(_.toLong).max
+    assert(new java.io.File(commits, s"$last").delete())
+    new java.io.File(commits, s".$last.crc").delete()
+    last
+  }
+
+  /** Stop after two batches (the goldens, then `second`), drop the balance
+    * query's last commit, run `damage` on the sink directory and restart:
+    * Spark replays batch 1. Checks the replay folded batch 1 once, that a
+    * fresh store recovers the same table, and that FOO rows routed once.
+    */
+  private def replayBatchOne(name: String, second: Seq[PaymentEvent], expected: Map[String, Long])(
+      damage: String => Unit): Unit = {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[PaymentEvent]
+    val tmp   = Files.createTempDirectory(name).toString
+    val run1  = PaymentPipeline.start(input.toDF(), s"$tmp/ckpt", s"$tmp/sink")
+    Seq(golden, second).foreach { batch =>
+      input.addData(batch: _*)
+      run1.processAllAvailable()
+    }
+    run1.stop()
+    assert(dropLastBalanceCommit(s"$tmp/ckpt") == 1L)
+    damage(s"$tmp/sink")
+
+    val run2 = PaymentPipeline.start(input.toDF(), s"$tmp/ckpt", s"$tmp/sink")
+    try {
+      run2.processAllAvailable()
+      assert(run2.balance.recentProgress.exists(_.batchId == 1L), "batch 1 was not replayed")
+      assert(run2.store.snapshot == expected, s"replayed batch folded wrongly: ${run2.store.snapshot}")
+      val fresh = new PaymentPipeline.BalanceStore(spark, s"$tmp/sink/_balance_state")
+      assert(fresh.snapshot == expected, s"recovered ${fresh.snapshot}")
+      val foo = spark.read.parquet(s"$tmp/sink").filter($"topic" === "rails-foo-topic")
+      assert(foo.select("paymentId").as[String].collect().sorted.toSeq ==
+        ("p1" +: "p2" +: "p3" +: second.filter(_.rails == "BANK_RAILS_FOO").map(_.paymentId)).sorted)
+    } finally run2.stop()
+  }
+
+  test("a batch replayed after its changelog append landed is folded once") {
+    val p6 = PaymentEvent("p6", 40L, "GBP", "DEF", "ABC", "BANK_RAILS_FOO")
+    replayBatchOne("graft-crash-replay", Seq(p6), Map("ABC" -> 250L, "XYZ" -> 800L))(_ => ())
+  }
+
+  test("a batch replayed after its changelog append landed in part is folded once") {
+    // batch 1 touches two accounts, so its append writes two part files;
+    // losing one of them is a multi-file job commit cut short
+    val second = Seq(
+      PaymentEvent("p6", 40L, "GBP", "DEF", "ABC", "BANK_RAILS_FOO"),
+      PaymentEvent("p7", 100L, "USD", "DEF", "XYZ", "BANK_RAILS_BAR"))
+    replayBatchOne("graft-crash-partial", second, Map("ABC" -> 250L, "XYZ" -> 880L)) { sink =>
+      val log = new java.io.File(s"$sink/_balance_state")
+      val batchOne = log.listFiles().filter { f =>
+        f.getName.startsWith("part-") &&
+          spark.read.parquet(f.getPath).filter($"batch_id" === 1L).count() > 0
+      }
+      assert(batchOne.length == 2, s"batch 1 should span two files: ${batchOne.map(_.getName).toSeq}")
+      assert(batchOne.head.delete())
+      new java.io.File(log, s".${batchOne.head.getName}.crc").delete()
+    }
+  }
+
+  test("the payment path plans no stateful operator and keeps no state store") {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[PaymentEvent]
+    val tmp   = Files.createTempDirectory("graft-stateless").toString
+    val topo  = PaymentPipeline.start(input.toDF(), s"$tmp/ckpt", s"$tmp/sink")
+    try {
+      input.addData(golden: _*)
+      topo.processAllAvailable()
+      assert(topo.store.get("ABC").contains(210L))
+      assert(topo.balance.lastProgress.stateOperators.isEmpty, "the balance query keeps Spark state")
+      assert(!new java.io.File(s"$tmp/ckpt/balance/state").exists(), "the balance query wrote a state store")
+    } finally topo.stop()
+  }
+
   test("changelog stores are idempotent to crash-replayed batches (same batch_id re-appended)") {
     val tmp   = Files.createTempDirectory("graft-replay").toString
     val total = new PaymentPipeline.BalanceStore(spark, s"$tmp/totals")
     val batch = Seq(("ABC", 210L)).toDF("fromAccount", "balance")
     total.append(batch, 0L)
-    total.append(batch, 0L) // replay: identical rows, same batch_id
-    total.append(Seq(("ABC", 250L)).toDF("fromAccount", "balance"), 1L)
-    assert(total.get("ABC").contains(250L), "last-wins read must ignore the replay")
-    // the same rule at the file level: recovery reads the changelog
+    total.append(batch, 0L) // replay: the same sums, same batch_id
+    assert(total.get("ABC").contains(210L), s"the replay folded twice: ${total.get("ABC")}")
+    // the same rule after a restart: recovery keeps the state before batch 0
     val reopened = new PaymentPipeline.BalanceStore(spark, s"$tmp/totals")
-    assert(reopened.snapshot == Map("ABC" -> 250L), s"recovered ${reopened.snapshot}")
+    assert(reopened.snapshot == Map("ABC" -> 210L), s"recovered ${reopened.snapshot}")
+    reopened.append(batch, 0L)
+    assert(reopened.get("ABC").contains(210L), s"the reopened replay folded twice: ${reopened.get("ABC")}")
+    reopened.append(Seq(("ABC", 40L)).toDF("fromAccount", "balance"), 1L)
+    assert(reopened.get("ABC").contains(250L), "the next batch must fold onto the replayed one")
+    // last-wins at the file level: the re-appended rows change nothing
+    val again = new PaymentPipeline.BalanceStore(spark, s"$tmp/totals")
+    assert(again.snapshot == Map("ABC" -> 250L), s"recovered ${again.snapshot}")
   }
 
   test("changelog compaction bounds the store's read path across many batches") {
-    // 13 direct appends (exactly what the stream's foreachBatch issues) with
-    // compaction every 4 batches: correctness must survive each rewrite and
-    // the data-file count must be bounded by the cadence, not batch count.
+    // 13 direct appends of per-batch sums (exactly what the stream's
+    // foreachBatch issues) with compaction every 4 batches: correctness must
+    // survive each rewrite and the data-file count must be bounded by the
+    // cadence, not batch count.
     val tmp   = Files.createTempDirectory("graft-compact").toString
     val store = new PaymentPipeline.BalanceStore(spark, s"$tmp/totals", compactEvery = 4L)
     val accounts = Seq("ABC", "XYZ", "DEF")
     (0L to 12L).foreach { b =>
-      // rotate accounts so compactions interleave touched and untouched keys
-      val acct = accounts((b % 3).toInt)
-      store.append(Seq((acct, 100L * (b + 1))).toDF("fromAccount", "balance"), b)
+      // rotate accounts so compactions interleave touched and untouched keys;
+      // each account's running balance after batch b is 100 * (b + 1)
+      val acct  = accounts((b % 3).toInt)
+      val delta = if (b < 3) 100L * (b + 1) else 300L
+      store.append(Seq((acct, delta)).toDF("fromAccount", "balance"), b)
     }
     // latest per key: ABC last wrote at b=12 (1300), XYZ at b=10 (1100), DEF at b=11 (1200)
     assert(store.get("ABC").contains(1300L))
     assert(store.get("XYZ").contains(1100L))
     assert(store.get("DEF").contains(1200L))
     assert(store.get("NOPE").isEmpty, "404 contract must survive compaction")
-    // last append was batch 12 -> compaction just ran: exactly the compacted
-    // file(s) remain. Without compaction this directory would hold 13 appends.
+    // batch 12 compacted before its append: the compacted file and batch
+    // 12's remain. Without compaction this directory would hold 13 appends.
     assert(store.dataFileCount <= 2, s"unbounded changelog: ${store.dataFileCount} files")
     // the compacted files hold the same table: recover it from them
     val reopened = new PaymentPipeline.BalanceStore(spark, s"$tmp/totals", compactEvery = 4L)
@@ -177,8 +269,9 @@ class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
     // file serves the exact snapshot the un-compacted appends did
     val tmp   = Files.createTempDirectory("graft-compact-one").toString
     val store = new PaymentPipeline.BalanceStore(spark, s"$tmp/totals", compactEvery = 0L)
+    // per-batch sums: SHARED's running balance after batch b is 100 * b
     (0L to 9L).foreach { b =>
-      store.append(Seq((s"A$b", 10L * b), ("SHARED", 100L * b)).toDF("fromAccount", "balance"), b)
+      store.append(Seq((s"A$b", 10L * b), ("SHARED", if (b == 0) 0L else 100L)).toDF("fromAccount", "balance"), b)
     }
     val before = store.snapshot
     assert(store.dataFileCount > 1, s"fixture must start un-compacted, got ${store.dataFileCount}")
@@ -223,8 +316,10 @@ class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
     // value no batch published.
     val tmp   = Files.createTempDirectory("graft-race").toString
     val store = new PaymentPipeline.BalanceStore(spark, s"$tmp/totals", compactEvery = 1L)
+    // each batch adds 100, so the running balance after batch b is value(b)
     def value(b: Long) = 100L * (b + 1)
-    store.append(Seq(("ABC", value(0))).toDF("fromAccount", "balance"), 0L)
+    def add100         = Seq(("ABC", 100L)).toDF("fromAccount", "balance")
+    store.append(add100, 0L)
     val batches = 12L
     @volatile var writing = true
     val seen    = java.util.concurrent.ConcurrentHashMap.newKeySet[Option[Long]]()
@@ -236,7 +331,7 @@ class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
       t.start()
       t
     }
-    try (1L to batches).foreach(b => store.append(Seq(("ABC", value(b))).toDF("fromAccount", "balance"), b))
+    try (1L to batches).foreach(b => store.append(add100, b))
     finally {
       writing = false
       readers.foreach(_.join())
