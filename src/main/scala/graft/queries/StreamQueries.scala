@@ -908,16 +908,17 @@ object StreamQueries {
     // multi-batch file source (`maxFilesPerTrigger=1` → one micro-batch per
     // input file, so the changelog genuinely re-emits updated keys across
     // batches — the KTable changelog contract). The registered result is
-    // the balance SNAPSHOT reconstructed from the BalanceStore's parquet
-    // changelog (latest committed batch per key, fully distributed), so a
-    // wrong update emission in ANY batch breaks the hash. Amounts are the
+    // the balance SNAPSHOT of a BalanceStore recovered from the parquet
+    // changelog after the stream stops (the changelog read once and folded
+    // in batch order, last row per key winning), so a wrong update
+    // emission in ANY batch breaks the hash. Amounts are the
     // reference model's LONGs (integer cents), making the streamed state
     // exact integer arithmetic — batch-boundary-independent by
     // construction.
     "q174_payment_topology_stream" -> ((s, dir) => {
       val in  = paymentsMemo(s, dir)
       val tmp = freshTmp("pay")
-      val store = withStatePartitions(s) {
+      withStatePartitions(s) {
         val stream = s.readStream
           .schema(s.read.parquet(in).schema)
           .option("maxFilesPerTrigger", "1")
@@ -925,10 +926,10 @@ object StreamQueries {
         val rt = graft.streaming.PaymentPipeline.start(stream, s"$tmp/ckpt", s"$tmp/sink")
         try rt.processAllAvailable()
         finally rt.stop()
-        rt.store
       }
-      store.snapshotDf
-        .select(col("fromAccount").as("from_account"), col("balance").as("balance_cents"))
+      val store = new graft.streaming.PaymentPipeline.BalanceStore(s, s"$tmp/sink/_balance_state")
+      s.createDataFrame(store.snapshot.toSeq)
+        .toDF("from_account", "balance_cents")
         .orderBy(col("from_account"))
     }),
 
@@ -1184,7 +1185,8 @@ object StreamQueries {
     // per-key TIMERS) under the byte gate: StateV2Balances' TTL'd
     // update-mode running sums over per-user cents, changelog appended
     // with the batch id, snapshot = latest committed emission per key (the
-    // q174 BalanceStore reconstruction, inline). The TTL (60 d) exceeds
+    // last-wins rule of q174's BalanceStore recovery, as a window over the
+    // log). The TTL (60 d) exceeds
     // the corpus event-time span, so no eviction can reset a key mid-run —
     // the snapshot must equal the grouped sum exactly. v1/v2 timer parity
     // is spec-proven (StateV2BalancesSpec mirrors StatefulBalancesSpec);

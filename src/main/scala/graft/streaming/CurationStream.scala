@@ -271,47 +271,12 @@ object CurationStream {
     * (window_start, source, v, cs); returns per (window_start, source) the
     * doc total and the two-sample Kolmogorov–Smirnov distance of the
     * window's length distribution vs [[lengthBaseline]], on the 2^20
-    * integer grid (q210's quantization — deterministic on any engine).
-    * Both ECDFs are right-continuous steps, so evaluating at every value
-    * of the UNION grid (baseline values ∪ the batch's values) attains the
-    * supremum exactly: a window value absent from the baseline is still a
-    * step of the window ECDF, so it joins the grid carrying the baseline
-    * step function's value there — the last baseline quantile at or below
-    * it (0 before the first). The grid stays domain-bounded (both value
-    * sets are distinct lengths), and when the batch's values are a subset
-    * of the baseline's the union adds nothing.
+    * integer grid (q210's quantization — deterministic on any engine):
+    * [[ksQuantilesOf]]'s first four columns.
     */
-  def ksOf(counts: DataFrame, baseline: DataFrame): DataFrame = {
-    val pairs = counts.select(col("window_start"), col("source")).distinct()
-    val nW = counts
-      .groupBy(col("window_start"), col("source"))
-      .agg(sum(col("cs")).as("nw"))
-    val byPair = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("window_start"), col("source"))
-    val grid = baseline
-      .select(col("v"), col("qb"))
-      .unionByName(
-        counts.select(col("v")).distinct()
-          .join(baseline.select(col("v")), Seq("v"), "left_anti")
-          .select(col("v"), lit(null).cast("long").as("qb")))
-      .withColumn(
-        "qb",
-        coalesce(
-          last(col("qb"), ignoreNulls = true).over(
-            org.apache.spark.sql.expressions.Window
-              .orderBy(col("v"))
-              .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)),
-          lit(0L)))
-    pairs
-      .crossJoin(broadcast(grid))
-      .join(counts, Seq("window_start", "source", "v"), "left")
-      .na.fill(0L, Seq("cs"))
-      .withColumn("c", sum(col("cs")).over(byPair.orderBy(col("v"))))
-      .join(broadcast(nW), Seq("window_start", "source"))
-      .withColumn("qw", expr("c * 1048576 div nw"))
-      .groupBy(col("window_start"), col("source"))
-      .agg(min(col("nw")).as("n_docs"), max(abs(col("qw") - col("qb"))).as("ks_q20"))
-  }
+  def ksOf(counts: DataFrame, baseline: DataFrame): DataFrame =
+    ksQuantilesOf(counts, baseline)
+      .select(col("window_start"), col("source"), col("n_docs"), col("ks_q20"))
 
   /** [[ksOf]] and [[quantilesOf]] FUSED over one union-grid pass — the
     * multi-axis monitors (q216/q217/q219) consume both off the same `len`
@@ -322,13 +287,21 @@ object CurationStream {
     * measured: the finalization batch is stage-count-bound, ~30 tiny
     * stages at 8 tasks each — see [[sinkReduced]]).
     *
-    * Quantiles evaluated on the UNION grid (baseline values ∪ the
-    * window's values) are EXACT: c jumps only at the window's own values,
-    * so for any p the minimal grid v with 100·c ≥ p·n is the minimal
-    * WINDOW value with that property — a baseline-only grid point below
-    * it carries c below the threshold, and one above it is not minimal
-    * (q209's integer rule is over a right-continuous step function, the
-    * same argument that makes [[ksOf]]'s union grid attain the sup).
+    * KS: both ECDFs are right-continuous steps, so evaluating at every
+    * value of the UNION grid (baseline values ∪ the batch's values) attains
+    * the supremum exactly: a window value absent from the baseline is still
+    * a step of the window ECDF, so it joins the grid carrying the baseline
+    * step function's value there — the last baseline quantile at or below
+    * it (0 before the first). The grid stays domain-bounded (both value
+    * sets are distinct lengths), and when the batch's values are a subset
+    * of the baseline's the union adds nothing.
+    *
+    * Quantiles evaluated on the same grid are EXACT: c jumps only at the
+    * window's own values, so for any p the minimal grid v with 100·c ≥ p·n
+    * is the minimal WINDOW value with that property — a baseline-only grid
+    * point below it carries c below the threshold, and one above it is not
+    * minimal (q209's integer rule is over a right-continuous step function,
+    * the same argument that makes the grid attain the KS sup).
     * Column-for-column identical output to the unfused join:
     * (window_start, source, n_docs, ks_q20, p50, p90, p99).
     */

@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
+import scala.jdk.CollectionConverters._
+
 /** Structured-Streaming twin of the reference's runtime
   * (`processor/PaymentTopology.java:39-98` wired by
   * `KafkaStreamsDemoConfiguration.java:34-48`), and the engine's one
@@ -31,9 +33,12 @@ import org.apache.spark.sql.types.StructType
   * store, lives in this process. Each micro-batch's sums are collected to
   * the driver, folded into the in-memory index that lookups read, and the
   * changed keys' running balances are appended to a parquet changelog
-  * stamped with the batchId. The driver's heap therefore holds one entry per
-  * account; a deployment past that size would shard the index by key across
-  * instances, as Kafka Streams shards its stores by partition.
+  * stamped with the batchId. A restart reads the changelog back and folds
+  * it on the driver in batch order, and compaction writes the index out,
+  * so Spark only reads and writes its files. The driver's heap therefore
+  * holds one entry per account; a deployment past that size would shard the
+  * index by key across instances, as Kafka Streams shards its stores by
+  * partition.
   */
 object PaymentPipeline {
 
@@ -44,29 +49,39 @@ object PaymentPipeline {
     * store (`BalanceController.java:24-33`). [[get]] and [[snapshot]] read
     * it and start no Spark job.
     *
+    * The table's one rule is the driver fold: rows `(fromAccount, balance,
+    * batch_id)` applied in `batch_id` order, the last row per key winning.
+    * It serves every batch and the recovery; Spark only reads and writes
+    * the parquet changelog.
+    *
     * The balance query's `foreachBatch` hands [[append]] one micro-batch's
     * per-account sums (deltas). [[append]] collects them in one job, folds
     * `index(a) + delta` into running balances for the changed keys, appends
-    * those running balances durably to a parquet changelog (`fromAccount`,
-    * `balance`, `batch_id`), and only then publishes the new index with one
-    * volatile write: durable first, visible second. A reader sees the state
-    * after some whole batch (the eventual-consistency window the reference
-    * tests tolerate, `KafkaStreamsPaymentIntegrationTest.java:185-188`).
+    * those running balances durably to the changelog, and only then
+    * publishes the new index with one volatile write: durable first,
+    * visible second. A reader sees the state after some whole batch (the
+    * eventual-consistency window the reference tests tolerate,
+    * `KafkaStreamsPaymentIntegrationTest.java:185-188`).
     *
-    * The changelog is the recovery log: a new store rebuilds its index from
-    * the changelog's latest row per key (max `batch_id` wins). A delta fold
-    * is not idempotent, so the store keeps one invariant: the changelog can
-    * rebuild the state before its last batch P as well as the state after
-    * it, and both are kept in memory. Spark replays P when P's append landed
+    * The changelog is the recovery log: a new store reads it once and
+    * replays it in `batch_id` order, as Kafka Streams restores a store from
+    * its changelog topic (`PaymentTopology.java:78-88`). A delta fold is not
+    * idempotent, so the store keeps one invariant: the changelog can rebuild
+    * the state before its last batch P as well as the state after it, and
+    * both are kept in memory. Spark replays P when P's append landed
     * (possibly only in part: a multi-file job commit is not atomic) but its
     * commit-log entry did not; [[append]] then folds P onto the state before
-    * it, and re-appends rows identical to those that landed, so last-wins
-    * recovery is unaffected. Every `compactEvery` batches the changelog is
-    * rewritten to its latest-per-key table, which bounds its files and so the
-    * restart's rebuild. Compaction runs at the start of a due batch, before
-    * its append, and never on a replay, so it never collapses the rows of a
-    * batch that can still replay. No reader lists files while the stream
-    * runs, so compaction deleting files races with no lookup.
+    * it, and re-appends rows identical to those that landed, so the replayed
+    * log folds to the same table.
+    *
+    * Every `compactEvery` batches the changelog is rewritten to the served
+    * index, which bounds its files and so the restart's read. A compacted
+    * row carries the batch id of the state it snapshots: the changelog's
+    * last batch, not the due one. Compaction runs only at the start of a
+    * batch whose predecessor committed, before its append, and never on a
+    * replay, so it never collapses the rows of a batch that can still
+    * replay. No reader lists files while the stream runs, so compaction
+    * deleting files races with no lookup.
     *
     * A null balance (an account whose only amounts decoded to null) reads
     * as absent.
@@ -75,25 +90,10 @@ object PaymentPipeline {
     */
   final class BalanceStore(spark: SparkSession, dir: String, compactEvery: Long = 16L) {
 
-    private val schema = "fromAccount STRING, balance BIGINT, batch_id BIGINT"
-
-    private def changelog: Option[DataFrame] =
-      if (new java.io.File(dir).exists()) Some(spark.read.schema(schema).parquet(dir))
-      else None // no batch committed yet
-
-    /** Each key's row from its latest batch: the last-wins rule that
-      * recovery, [[snapshotDf]] and [[compact]] share.
-      */
-    private def latest(log: DataFrame): DataFrame =
-      log
-        .groupBy(col("fromAccount"))
-        .agg(
-          max_by(col("balance"), col("batch_id")).as("balance"),
-          max(col("batch_id")).as("batch_id")
-        )
+    private val schema = StructType.fromDDL("fromAccount STRING, balance BIGINT, batch_id BIGINT")
 
     /** `(fromAccount, balance, …)` rows folded over `index`, in order. */
-    private def folded(index: Map[String, Long], rows: Array[Row]): Map[String, Long] =
+    private def folded(index: Map[String, Long], rows: Seq[Row]): Map[String, Long] =
       rows.foldLeft(index) { (m, r) =>
         if (r.isNullAt(1)) m - r.getString(0) else m.updated(r.getString(0), r.getLong(1))
       }
@@ -104,12 +104,14 @@ object PaymentPipeline {
     private var prior: Map[String, Long] = Map.empty
     @volatile private var index: Map[String, Long] = Map.empty
 
-    changelog.foreach { log =>
-      val top = log.agg(max(col("batch_id"))).head()
-      if (!top.isNullAt(0)) {
-        last = top.getLong(0)
-        prior = folded(Map.empty, latest(log.filter(col("batch_id") < last)).collect())
-        index = folded(prior, log.filter(col("batch_id") === last).collect())
+    if (new java.io.File(dir).exists()) {
+      // one read, replayed in batch order; rows a batch holds twice are equal
+      val log = spark.read.schema(schema).parquet(dir).collect().toSeq.sortBy(_.getLong(2))
+      if (log.nonEmpty) {
+        last = log.last.getLong(2)
+        val (before, at) = log.span(_.getLong(2) < last)
+        prior = folded(Map.empty, before)
+        index = folded(prior, at)
       }
     }
 
@@ -117,17 +119,6 @@ object PaymentPipeline {
       * (`BalanceController.java:29-33`).
       */
     def get(account: String): Option[Long] = index.get(account)
-
-    /** Full current state as a DISTRIBUTED frame (`fromAccount`, `balance`)
-      * read from the changelog files — latest batch wins per key. This is
-      * the surface the byte-gated q174 board row hashes.
-      */
-    def snapshotDf: DataFrame =
-      changelog
-        .map(latest(_).select(col("fromAccount"), col("balance")))
-        .getOrElse(
-          spark.range(0).selectExpr(
-            "CAST(NULL AS STRING) AS fromAccount", "CAST(NULL AS BIGINT) AS balance"))
 
     /** Full current state: the served index itself. */
     def snapshot: Map[String, Long] = index
@@ -140,7 +131,7 @@ object PaymentPipeline {
       val replay = batchId == last
       if (!replay && compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) compact()
       val base = if (replay) prior else index
-      val rows = sums.select(col("fromAccount"), col("balance")).collect().map { r =>
+      val rows = sums.select(col("fromAccount"), col("balance")).collect().toSeq.map { r =>
         val account = r.getString(0)
         val balance: java.lang.Long =
           if (r.isNullAt(1)) base.get(account).map(Long.box).orNull
@@ -148,35 +139,36 @@ object PaymentPipeline {
         Row(account, balance, batchId)
       }
       if (rows.nonEmpty) {
-        spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType.fromDDL(schema))
-          .write.mode("append").parquet(dir)
+        logged(rows).write.mode("append").parquet(dir)
         last = batchId
         prior = base
         index = folded(base, rows)
       }
     }
 
-    /** Rewrite the changelog to latest-per-key (see class doc). Safe order:
-      * snapshot the current data files, append the compacted rows (the scan
-      * plans against the snapshot — the new file doesn't exist yet), then
-      * delete the snapshot. A crash at any point leaves a changelog that
-      * recovers the same table.
-      *
-      * The rewrite is `repartition(1, key)`, never `coalesce(1)`: coalesce
-      * would collapse the latest-per-key AGGREGATION itself into one task
-      * (the upstream stages inherit the coalesced parallelism), while the
-      * key-hash repartition keeps the aggregation at full width and only
-      * bounds the WRITE to one file.
+    /** Rewrite the changelog to the served index, every row stamped with
+      * the changelog's last batch (see class doc). Safe order: snapshot the
+      * current data files, append the index as one file, then delete the
+      * snapshot. A crash at any point leaves a changelog that folds to the
+      * same table. The stream calls it only from [[append]], between
+      * batches: a call between an append and its batch's commit would
+      * collapse the rows before that batch, which its replay folds onto.
       */
-    def compact(): Unit = changelog.foreach { log =>
+    private[streaming] def compact(): Unit = {
       val old = partFiles
-      latest(log)
-        .repartition(1, col("fromAccount"))
-        .write
-        .mode("append")
-        .parquet(dir)
-      old.foreach(_.delete())
+      if (old.nonEmpty) {
+        logged(index.toSeq.map { case (a, b) => Row(a, b, last) })
+          .coalesce(1)
+          .write
+          .mode("append")
+          .parquet(dir)
+        old.foreach(_.delete())
+      }
     }
+
+    /** Changelog rows as a frame for a write. */
+    private def logged(rows: Seq[Row]): DataFrame =
+      spark.createDataFrame(rows.asJava, schema)
 
     /** Data files currently in the changelog directory (test/ops surface —
       * the boundedness compaction guarantees is asserted on this).

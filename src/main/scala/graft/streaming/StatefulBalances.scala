@@ -1,61 +1,41 @@
 package graft.streaming
 
 import graft.model.PaymentEvent
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Custom-state streaming operators via `flatMapGroupsWithState` — the
   * escape hatch for stateful shapes `groupBy.agg` cannot express. Two are
   * provided:
   *
-  *   - [[runningBalances]]: the reference's balance KTable re-expressed with
-  *     explicit per-key state (`KeyValueStore<String,Long>` ↔ `GroupState
-  *     [Long]`), emitting one update per changed key per micro-batch — the
-  *     literal Kafka Streams `aggregate` contract
-  *     (`PaymentTopology.java:78-88`). [[PaymentOps.balances]] in update
-  *     mode is the preferred declarative equivalent; this variant exists for
-  *     shapes that need arbitrary state transitions.
+  *   - [[runningBalancesTtl]]: the reference's balance KTable
+  *     (`PaymentTopology.java:78-88`) re-expressed with explicit per-key
+  *     state (`KeyValueStore<String,Long>` ↔ `GroupState`), emitting one
+  *     update per changed key per micro-batch, with an event-time TTL the
+  *     reference never needed. The payment path itself keeps its table in
+  *     [[PaymentPipeline.BalanceStore]]; this variant is the v1 reference
+  *     for [[StateV2Balances]].
   *   - [[streamingDedup]]: exact streaming deduplication by key with
   *     unbounded state — first occurrence passes, replays are dropped
   *     (the streaming twin of the batch exact-dedup q40).
   *
   * Scale notes: state is partitioned by group key across the shuffle; use
   * the RocksDB state-store provider for large key spaces, and prefer
-  * timeout-based TTL (`GroupStateTimeout`) when keys churn — unbounded
-  * no-TTL state here is faithful to the reference.
+  * timeout-based TTL (`GroupStateTimeout`) when keys churn.
   */
 object StatefulBalances {
 
   final case class BalanceUpdate(fromAccount: String, balance: Long)
-
-  /** Per-account running sums with explicit state. Run with
-    * `outputMode(Update)`.
-    */
-  def runningBalances(payments: Dataset[PaymentEvent]): Dataset[BalanceUpdate] = {
-    import payments.sparkSession.implicits._
-    payments
-      .groupByKey(_.fromAccount)
-      .flatMapGroupsWithState[Long, BalanceUpdate](
-        OutputMode.Update(),
-        GroupStateTimeout.NoTimeout()
-      ) { (account: String, events: Iterator[PaymentEvent], state: GroupState[Long]) =>
-        val prior = state.getOption.getOrElse(0L) // Initializer = 0L
-        val next  = events.foldLeft(prior)((agg, p) => agg + p.amount) // Aggregator = agg + value
-        if (next != prior || !state.exists) {
-          state.update(next)
-          Iterator.single(BalanceUpdate(account, next))
-        } else Iterator.empty
-      }
-  }
 
   /** A payment stamped with its event time — the input shape for TTL'd
     * state, where "idle" must be defined on the DATA's clock.
     */
   final case class TimedPayment(ts: java.sql.Timestamp, payment: PaymentEvent)
 
-  /** [[runningBalances]] with a sliding event-time TTL: a key whose last
-    * activity falls `ttl` behind the watermark is EVICTED (silently — the
-    * next payment re-initializes from 0L). This is the bounded-state variant
+  /** Per-account running sums with a sliding event-time TTL: a key whose
+    * last activity falls `ttl` behind the watermark is EVICTED (silently —
+    * the next payment re-initializes from 0L). Run with
+    * `outputMode(Update)`. This is the bounded-state variant
     * the reference never needed (its KTable is unbounded,
     * `PaymentTopology.java:78-88`) but a 100 TB key space does: with key
     * churn, no-TTL state grows without bound; with TTL + the RocksDB
@@ -139,20 +119,4 @@ object StatefulBalances {
         }
       }
   }
-
-  /** Convenience: wire [[runningBalances]] to a memory sink for interactive
-    * inspection (test/debug surface).
-    */
-  def startToMemory(
-      spark: SparkSession,
-      payments: Dataset[PaymentEvent],
-      queryName: String,
-      checkpointDir: String
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    runningBalances(payments).writeStream
-      .queryName(queryName)
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .format("memory")
-      .start()
 }

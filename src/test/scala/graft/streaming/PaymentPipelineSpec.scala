@@ -138,12 +138,15 @@ class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
     * Spark replays batch 1. Checks the replay folded batch 1 once, that a
     * fresh store recovers the same table, and that FOO rows routed once.
     */
-  private def replayBatchOne(name: String, second: Seq[PaymentEvent], expected: Map[String, Long])(
-      damage: String => Unit): Unit = {
+  private def replayBatchOne(
+      name: String,
+      second: Seq[PaymentEvent],
+      expected: Map[String, Long],
+      compactEvery: Long = 16L)(damage: String => Unit): Unit = {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[PaymentEvent]
     val tmp   = Files.createTempDirectory(name).toString
-    val run1  = PaymentPipeline.start(input.toDF(), s"$tmp/ckpt", s"$tmp/sink")
+    val run1  = PaymentPipeline.start(input.toDF(), s"$tmp/ckpt", s"$tmp/sink", compactEvery)
     Seq(golden, second).foreach { batch =>
       input.addData(batch: _*)
       run1.processAllAvailable()
@@ -152,7 +155,7 @@ class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
     assert(dropLastBalanceCommit(s"$tmp/ckpt") == 1L)
     damage(s"$tmp/sink")
 
-    val run2 = PaymentPipeline.start(input.toDF(), s"$tmp/ckpt", s"$tmp/sink")
+    val run2 = PaymentPipeline.start(input.toDF(), s"$tmp/ckpt", s"$tmp/sink", compactEvery)
     try {
       run2.processAllAvailable()
       assert(run2.balance.recentProgress.exists(_.batchId == 1L), "batch 1 was not replayed")
@@ -170,22 +173,68 @@ class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
     replayBatchOne("graft-crash-replay", Seq(p6), Map("ABC" -> 250L, "XYZ" -> 800L))(_ => ())
   }
 
-  test("a batch replayed after its changelog append landed in part is folded once") {
-    // batch 1 touches two accounts, so its append writes two part files;
-    // losing one of them is a multi-file job commit cut short
-    val second = Seq(
-      PaymentEvent("p6", 40L, "GBP", "DEF", "ABC", "BANK_RAILS_FOO"),
-      PaymentEvent("p7", 100L, "USD", "DEF", "XYZ", "BANK_RAILS_BAR"))
-    replayBatchOne("graft-crash-partial", second, Map("ABC" -> 250L, "XYZ" -> 880L)) { sink =>
-      val log = new java.io.File(s"$sink/_balance_state")
-      val batchOne = log.listFiles().filter { f =>
-        f.getName.startsWith("part-") &&
-          spark.read.parquet(f.getPath).filter($"batch_id" === 1L).count() > 0
+  /** Batch 1 touches two accounts, so its append writes two one-row part
+    * files; losing one of them is a multi-file job commit cut short.
+    */
+  private val touchTwo = Seq(
+    PaymentEvent("p6", 40L, "GBP", "DEF", "ABC", "BANK_RAILS_FOO"),
+    PaymentEvent("p7", 100L, "USD", "DEF", "XYZ", "BANK_RAILS_BAR"))
+
+  /** Delete one of batch 1's two append files (a compacted file holds both
+    * accounts in one file, so it is never picked).
+    */
+  private def dropOneBatchOneFile(sink: String): Unit = {
+    val log = new java.io.File(s"$sink/_balance_state")
+    val batchOne = log.listFiles().filter { f =>
+      f.getName.startsWith("part-") && {
+        val rows = spark.read.parquet(f.getPath)
+        rows.count() == 1 && rows.filter($"batch_id" === 1L).count() == 1
       }
-      assert(batchOne.length == 2, s"batch 1 should span two files: ${batchOne.map(_.getName).toSeq}")
-      assert(batchOne.head.delete())
-      new java.io.File(log, s".${batchOne.head.getName}.crc").delete()
     }
+    assert(batchOne.length == 2, s"batch 1 should span two files: ${batchOne.map(_.getName).toSeq}")
+    assert(batchOne.head.delete())
+    new java.io.File(log, s".${batchOne.head.getName}.crc").delete()
+  }
+
+  test("a batch replayed after its changelog append landed in part is folded once") {
+    replayBatchOne("graft-crash-partial", touchTwo, Map("ABC" -> 250L, "XYZ" -> 880L))(dropOneBatchOneFile)
+  }
+
+  test("a batch replayed after a compaction at its start is folded once") {
+    // compactEvery = 1: batch 1's start rewrote the changelog to the table
+    // after batch 0, stamped 0, so its replay folds onto that table
+    replayBatchOne("graft-crash-compacted", touchTwo, Map("ABC" -> 250L, "XYZ" -> 880L), compactEvery = 1L)(
+      dropOneBatchOneFile)
+  }
+
+  test("a crash between compaction's append and its deletes recovers the same table") {
+    // the compacted file lands beside the part files it replaces: keep
+    // copies of those, compact, then put them back
+    val tmp   = Files.createTempDirectory("graft-compact-crash")
+    val dir   = s"$tmp/totals"
+    def store = new PaymentPipeline.BalanceStore(spark, dir, compactEvery = 0L)
+    val live  = store
+    // per-batch sums: SHARED's running balance after batch b is 100 * (b + 1)
+    (0L to 3L).foreach { b =>
+      live.append(Seq((s"A$b", 10L * b), ("SHARED", 100L)).toDF("fromAccount", "balance"), b)
+    }
+    val before = live.snapshot
+    val saved  = Files.createDirectory(tmp.resolve("saved"))
+    val old    = new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
+    old.foreach(f => Files.copy(f.toPath, saved.resolve(f.getName)))
+    live.compact()
+    assert(live.dataFileCount == 1, s"expected 1 file, got ${live.dataFileCount}")
+    old.foreach(f => Files.copy(saved.resolve(f.getName), f.toPath))
+    assert(live.dataFileCount == old.length + 1)
+    val fresh = store
+    assert(fresh.snapshot == before, s"recovered ${fresh.snapshot}")
+    // the next batch folds onto the recovered table, and so does its replay
+    val next = Seq(("SHARED", 5L)).toDF("fromAccount", "balance")
+    fresh.append(next, 4L)
+    assert(fresh.get("SHARED").contains(405L), s"got ${fresh.get("SHARED")}")
+    val again = store
+    again.append(next, 4L)
+    assert(again.snapshot == before.updated("SHARED", 405L), s"replay recovered ${again.snapshot}")
   }
 
   test("the payment path plans no stateful operator and keeps no state store") {
@@ -383,10 +432,6 @@ class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
     val store = new PaymentPipeline.BalanceStore(spark, s"$tmp/never-written")
     assert(store.get("ABC").isEmpty, "no committed batch must read as 404")
     assert(store.snapshot.isEmpty)
-    val df = store.snapshotDf
-    assert(df.schema.map(f => f.name -> f.dataType.simpleString) ==
-      Seq("fromAccount" -> "string", "balance" -> "bigint"))
-    assert(df.count() == 0)
     store.compact()
     assert(!new java.io.File(s"$tmp/never-written").exists(), "compact must not create the store")
     assert(store.dataFileCount == 0)

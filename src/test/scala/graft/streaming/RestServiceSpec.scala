@@ -51,6 +51,22 @@ class RestServiceSpec extends AnyFunSuite with SparkSpec {
     } finally svc.stop()
   }
 
+  test("a 200 answer is not held back by the delayed ACK (TCP_NODELAY)") {
+    // with Nagle on, a 200's body waits about 40 ms for the client's
+    // delayed ACK of its headers; a 404 has no body and never waits
+    val svc = new RestService(_ => Some(210L), () => "plan").start()
+    try {
+      get(svc.boundPort, "/v1/kafka-streams/balance/ABC") // connect once
+      val ms = (1 to 20).map { _ =>
+        val t0 = System.nanoTime()
+        assert(get(svc.boundPort, "/v1/kafka-streams/balance/ABC").statusCode() == 200)
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      val median = (ms(9) + ms(10)) / 2
+      assert(median < 20.0, f"median 200 lookup $median%.1f ms: ${ms.map(m => f"$m%.1f").mkString(" ")}")
+    } finally svc.stop()
+  }
+
   test("topology endpoint returns the plan text (TopologyController contract)") {
     val plan = PaymentPipeline.describe(
       graft.operators.PaymentOps.topology(

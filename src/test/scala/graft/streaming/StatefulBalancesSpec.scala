@@ -15,26 +15,6 @@ class StatefulBalancesSpec extends AnyFunSuite with SparkSpec {
   private def p(id: String, amount: Long, from: String) =
     PaymentEvent(id, amount, "GBP", "SINK", from, "BANK_RAILS_FOO")
 
-  test("runningBalances: per-key state accumulates across micro-batches, emits only changed keys") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[PaymentEvent]
-    val tmp   = Files.createTempDirectory("graft-state").toString
-    val query = StatefulBalances.startToMemory(spark, input.toDS(), "state_bal", s"$tmp/ckpt")
-
-    input.addData(p("p1", 100, "ABC"), p("p2", 50, "ABC"), p("p3", 800, "XYZ"))
-    query.processAllAvailable()
-    val batch1 = spark.table("state_bal").as[StatefulBalances.BalanceUpdate].collect()
-    assert(batch1.map(u => u.fromAccount -> u.balance).toMap == Map("ABC" -> 150L, "XYZ" -> 800L))
-
-    // Second batch touches only ABC — XYZ must NOT re-emit (changelog contract).
-    input.addData(p("p4", 60, "ABC"))
-    query.processAllAvailable()
-    val all = spark.table("state_bal").as[StatefulBalances.BalanceUpdate].collect()
-    assert(all.count(_.fromAccount == "XYZ") == 1, "unchanged key must not re-emit")
-    assert(all.filter(_.fromAccount == "ABC").map(_.balance).max == 210L)
-    query.stop()
-  }
-
   test("streaming aggregation runs on the RocksDB state-store provider (large-key-space path)") {
     // The reference leans on RocksDB for its state store; Spark's RocksDB
     // provider is the equivalent for key spaces that outgrow the in-memory
