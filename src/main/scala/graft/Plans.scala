@@ -120,7 +120,7 @@ object Plans {
       store.merge(feed.filter(col("ts") < split), 0L)
       store.mergeRows(feed.filter(col("ts") >= split), 1L)
     }),
-    // The interactive REST point read (GET /dim/{user}?at=T): the dump
+    // The interactive as-of point read (`ScdStore.lookup`): the dump
     // must show the bucket predicate CONSTANT-FOLDED into a one-directory
     // partition filter and the user_id equality in PushedFilters — a true
     // point lookup over the bucket-partitioned changelog, never a store

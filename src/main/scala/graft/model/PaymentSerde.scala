@@ -52,7 +52,7 @@ object PaymentSerde {
     * to a JSON object with null members (Spark drops nulls by default —
     * `ignoreNullFields=false` keeps the reference's explicit-null shape).
     */
-  def toJsonValue(df: DataFrame): Column =
+  private def toJsonValue(df: DataFrame): Column =
     to_json(
       struct(df.columns.filterNot(_ == "kafkaKey").map(col).toIndexedSeq: _*),
       Map("ignoreNullFields" -> "false")

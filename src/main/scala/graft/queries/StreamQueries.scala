@@ -914,19 +914,18 @@ object StreamQueries {
     // emission in ANY batch breaks the hash. Amounts are the
     // reference model's LONGs (integer cents), making the streamed state
     // exact integer arithmetic — batch-boundary-independent by
-    // construction.
+    // construction. q174 and q175 run `start` under the session's own
+    // settings, as a user's call does.
     "q174_payment_topology_stream" -> ((s, dir) => {
       val in  = paymentsMemo(s, dir)
       val tmp = freshTmp("pay")
-      withStatePartitions(s) {
-        val stream = s.readStream
-          .schema(s.read.parquet(in).schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(in)
-        val rt = graft.streaming.PaymentPipeline.start(stream, s"$tmp/ckpt", s"$tmp/sink")
-        try rt.processAllAvailable()
-        finally rt.stop()
-      }
+      val stream = s.readStream
+        .schema(s.read.parquet(in).schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(in)
+      val rt = graft.streaming.PaymentPipeline.start(stream, s"$tmp/ckpt", s"$tmp/sink")
+      try rt.processAllAvailable()
+      finally rt.stop()
       val store = new graft.streaming.PaymentPipeline.BalanceStore(s, s"$tmp/sink/_balance_state")
       s.createDataFrame(store.snapshot.toSeq)
         .toDF("from_account", "balance_cents")
@@ -942,15 +941,13 @@ object StreamQueries {
     "q175_payment_sinks_stream" -> ((s, dir) => {
       val in  = paymentsMemo(s, dir)
       val tmp = freshTmp("paysink")
-      withStatePartitions(s) {
-        val stream = s.readStream
-          .schema(s.read.parquet(in).schema)
-          .option("maxFilesPerTrigger", "2")
-          .parquet(in)
-        val rt = graft.streaming.PaymentPipeline.start(stream, s"$tmp/ckpt", s"$tmp/sink")
-        try rt.processAllAvailable()
-        finally rt.stop()
-      }
+      val stream = s.readStream
+        .schema(s.read.parquet(in).schema)
+        .option("maxFilesPerTrigger", "2")
+        .parquet(in)
+      val rt = graft.streaming.PaymentPipeline.start(stream, s"$tmp/ckpt", s"$tmp/sink")
+      try rt.processAllAvailable()
+      finally rt.stop()
       s.read.parquet(s"$tmp/sink")
         .groupBy(col("topic"))
         .agg(count(lit(1)).as("n"), round(sum(col("amount")) / 100.0, 2).as("total"))

@@ -149,8 +149,9 @@ object PaymentPipeline {
     /** Rewrite the changelog to the served index, every row stamped with
       * the changelog's last batch (see class doc). Safe order: snapshot the
       * current data files, append the index as one file, then delete the
-      * snapshot. A crash at any point leaves a changelog that folds to the
-      * same table. The stream calls it only from [[append]], between
+      * snapshot, each file with its `.crc` sidecar if the file system wrote
+      * one. A crash at any point leaves a changelog that folds to the same
+      * table. The stream calls it only from [[append]], between
       * batches: a call between an append and its batch's commit would
       * collapse the rows before that batch, which its replay folds onto.
       */
@@ -162,7 +163,10 @@ object PaymentPipeline {
           .write
           .mode("append")
           .parquet(dir)
-        old.foreach(_.delete())
+        old.foreach { f =>
+          f.delete()
+          new java.io.File(f.getParentFile, s".${f.getName}.crc").delete()
+        }
       }
     }
 

@@ -5,8 +5,8 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
-/** The reference's interactive-query HTTP surface, re-expressed over the
-  * streaming state this engine maintains:
+/** The reference's interactive-query HTTP surface, its two routes
+  * re-expressed over the streaming state this engine maintains:
   *
   *   - `GET /v1/kafka-streams/balance/{account}` — point lookup in the
   *     [[PaymentPipeline.BalanceStore]] index that [[PaymentPipeline.start]]
@@ -15,12 +15,6 @@ import java.nio.charset.StandardCharsets
   *     `controller/BalanceController.java:22-35` (store `get`, null→404).
   *   - `GET /v1/kafka-streams/topology` — the current plan text, twin of
   *     `controller/TopologyController.java:20-23` (`Topology#describe`).
-  *   - `GET /v1/kafka-streams/dim/{user}?at=T` — the BalanceController
-  *     contract extended to the SCD-2 dimension tier: the user's version
-  *     AT instant `T` (epoch-µs or `yyyy-MM-dd HH:mm:ss`), served from
-  *     [[ScdStore.lookup]]'s bucket-pruned, pushed-down parquet point
-  *     lookup; absent (unknown user, or `T` before their first version)
-  *     ⇒ 404, malformed user/instant ⇒ 400.
   *
   * Built on the JDK's `com.sun.net.httpserver` so the library adds no HTTP
   * dependency; a production deployment would front the same two functions
@@ -30,6 +24,10 @@ import java.nio.charset.StandardCharsets
   * eventual-consistency window) the reference's integration test tolerates
   * (`KafkaStreamsPaymentIntegrationTest.java:185-204`). A balance lookup
   * starts no Spark job and touches no file.
+  *
+  * Requests run on a pool of four worker threads. Without an executor the
+  * JDK reads and answers each request on its single dispatcher thread, so
+  * one stalled client would hold up every lookup.
   *
   * A response goes out as two writes, headers then body. With Nagle's
   * algorithm on, the body waits for the client's delayed ACK of the
@@ -42,8 +40,7 @@ import java.nio.charset.StandardCharsets
 final class RestService(
     getBalance: String => Option[Long],
     describeTopology: () => String,
-    port: Int = 0, // 0 = ephemeral (tests); fixed port in deployment
-    getDimAt: (Long, java.sql.Timestamp) => Option[String] = (_, _) => None
+    port: Int = 0 // 0 = ephemeral (tests); fixed port in deployment
 ) {
 
   // TCP_NODELAY must be asked for before the JDK's first HttpServer (class doc)
@@ -52,10 +49,8 @@ final class RestService(
     HttpServer.create(new InetSocketAddress(port), 0)
   }
 
-  // Small worker pool: without one the JDK server runs every handler on its
-  // single dispatcher thread, serializing all requests behind one dim
-  // lookup's Spark job.
-  // Daemon threads so an un-stopped service never pins the JVM.
+  // The worker pool (class doc). Daemon threads so an un-stopped service
+  // never pins the JVM.
   private val pool = java.util.concurrent.Executors.newFixedThreadPool(
     4,
     (r: Runnable) => { val t = new Thread(r, "graft-rest"); t.setDaemon(true); t }
@@ -79,46 +74,6 @@ final class RestService(
     "/v1/kafka-streams/topology",
     (ex: HttpExchange) => respondWith(ex)((200, describeTopology()))
   )
-
-  private val DimPath = "/v1/kafka-streams/dim/"
-
-  server.createContext(
-    DimPath,
-    (ex: HttpExchange) => respondWith(ex) {
-      val uid = ex.getRequestURI.getPath.stripPrefix(DimPath).toLongOption
-      // decode exactly ONCE, from the RAW query (URI.getQuery already
-      // percent-decodes, so decoding its output corrupts legitimate
-      // '+'/'%' content); a malformed escape maps to the 400 branch via
-      // the Option, never to respondWith's generic 500
-      val at = Option(ex.getRequestURI.getRawQuery).getOrElse("")
-        .split("&")
-        .collectFirst { case kv if kv.startsWith("at=") => kv.drop(3) }
-        .flatMap(raw =>
-          scala.util.Try(java.net.URLDecoder.decode(raw, StandardCharsets.UTF_8)).toOption)
-        .flatMap(parseInstant)
-      (uid, at) match {
-        case (Some(u), Some(t)) =>
-          getDimAt(u, t) match {
-            case Some(body) => (200, body) // JSON: the version valid AT t
-            case None       => (404, "")   // unknown user / before first version
-          }
-        case _ =>
-          (400, "expected /dim/{user_id}?at=<epoch-micros | yyyy-MM-dd HH:mm:ss>")
-      }
-    }
-  )
-
-  /** `at` accepts exact epoch-µs (the engine's internal clock) or the
-    * store's own `yyyy-MM-dd HH:mm:ss[.f]` timestamp form.
-    */
-  private def parseInstant(s: String): Option[java.sql.Timestamp] =
-    s.toLongOption match {
-      case Some(us) =>
-        val t = new java.sql.Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
-        t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
-        Some(t)
-      case None => scala.util.Try(java.sql.Timestamp.valueOf(s)).toOption
-    }
 
   /** Handler exceptions map to a GENERIC 500 — the exception is logged, not
     * serialized into the body (internal detail leakage), and fatal JVM errors
@@ -153,10 +108,4 @@ object RestService {
   /** Wire the service straight onto a running topology. */
   def forTopology(running: PaymentPipeline.RunningTopology, planText: String, port: Int = 0): RestService =
     new RestService(running.store.get, () => planText, port)
-
-  /** The dim route's lookup function over a maintained [[ScdStore]] —
-    * `store.lookup` serialized to the route's JSON body.
-    */
-  def dimLookup(store: ScdStore): (Long, java.sql.Timestamp) => Option[String] =
-    (uid, at) => store.lookup(uid, at).map(_.toJson(uid))
 }

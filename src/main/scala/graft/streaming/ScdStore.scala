@@ -158,12 +158,11 @@ final class ScdStore(
     keys.select(bucketOf(col("user_id")).as("b")).distinct()
       .collect().map(_.getInt(0)).toSeq
 
-  /** INTERACTIVE AS-OF POINT LOOKUP — `GET /dim/{user}?at=T`
-    * (BalanceController's store-get/404 contract, extended to the
-    * versioned dimension): the user's version whose validity interval
-    * contains `at` (`valid_from ≤ at < valid_to` — versions partition
-    * time, so at most one row qualifies), None ⇒ HTTP 404 (user unknown,
-    * or `at` before their first version).
+  /** INTERACTIVE AS-OF POINT LOOKUP (BalanceController's store-get/404
+    * contract, extended to the versioned dimension): the user's version
+    * whose validity interval contains `at` (`valid_from ≤ at < valid_to` —
+    * versions partition time, so at most one row qualifies), None ⇒ absent
+    * (user unknown, or `at` before their first version).
     *
     * The scan is a real point lookup, not a table pass: the bucket
     * predicate is `bucketOf(lit(userId))` — FOLDABLE, so Catalyst
@@ -329,7 +328,7 @@ object ScdStore {
   final case class VersionAt(
       version: Long, cents: Long, validFrom: java.sql.Timestamp, validTo: java.sql.Timestamp) {
 
-    /** The REST body (the reference's hand-rolled serializer discipline,
+    /** The version as JSON (the reference's hand-rolled serializer discipline,
       * `serdes/JsonSerializer.java:20-29` — no reflection, stable field
       * order; timestamps in the store's own `yyyy-MM-dd HH:mm:ss` form).
       */

@@ -6,6 +6,15 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared session factory — one lazy SparkSession per suite. */
 trait SparkSpec { self: AnyFunSuite =>
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** A fresh temporary directory, deleted with its contents when the test
+    * JVM exits.
+    */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    graft.sources.SessionMemo.deleteOnExit(dir)
+    dir
+  }
 }
 
 object SparkSpec {

@@ -33,7 +33,7 @@ class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
   test("streaming topology: routing + balances + 404 contract, two batches") {
     implicit val sqlCtx = spark.sqlContext
     val input   = MemoryStream[PaymentEvent]
-    val tmp     = Files.createTempDirectory("graft-stream").toString
+    val tmp     = tempDir("graft-stream").toString
     val topo    = PaymentPipeline.start(input.toDF(), s"$tmp/ckpt", s"$tmp/sink")
 
     input.addData(golden: _*)
@@ -64,7 +64,7 @@ class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
   test("each of start's two queries scans the source once per batch") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[PaymentEvent]
-    val tmp   = Files.createTempDirectory("graft-scan").toString
+    val tmp   = tempDir("graft-scan").toString
     val topo  = PaymentPipeline.start(input.toDF(), s"$tmp/ckpt", s"$tmp/sink")
     try {
       input.addData(golden: _*)
@@ -90,7 +90,7 @@ class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
     // changelog.
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[PaymentEvent]
-    val tmp   = Files.createTempDirectory("graft-restart").toString
+    val tmp   = tempDir("graft-restart").toString
 
     val run1 = PaymentPipeline.start(input.toDF(), s"$tmp/ckpt", s"$tmp/sink", compactEvery = 2L)
     input.addData(golden: _*)
@@ -145,7 +145,7 @@ class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
       compactEvery: Long = 16L)(damage: String => Unit): Unit = {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[PaymentEvent]
-    val tmp   = Files.createTempDirectory(name).toString
+    val tmp   = tempDir(name).toString
     val run1  = PaymentPipeline.start(input.toDF(), s"$tmp/ckpt", s"$tmp/sink", compactEvery)
     Seq(golden, second).foreach { batch =>
       input.addData(batch: _*)
@@ -210,7 +210,7 @@ class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
   test("a crash between compaction's append and its deletes recovers the same table") {
     // the compacted file lands beside the part files it replaces: keep
     // copies of those, compact, then put them back
-    val tmp   = Files.createTempDirectory("graft-compact-crash")
+    val tmp   = tempDir("graft-compact-crash")
     val dir   = s"$tmp/totals"
     def store = new PaymentPipeline.BalanceStore(spark, dir, compactEvery = 0L)
     val live  = store
@@ -240,7 +240,7 @@ class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
   test("the payment path plans no stateful operator and keeps no state store") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[PaymentEvent]
-    val tmp   = Files.createTempDirectory("graft-stateless").toString
+    val tmp   = tempDir("graft-stateless").toString
     val topo  = PaymentPipeline.start(input.toDF(), s"$tmp/ckpt", s"$tmp/sink")
     try {
       input.addData(golden: _*)
@@ -252,7 +252,7 @@ class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("changelog stores are idempotent to crash-replayed batches (same batch_id re-appended)") {
-    val tmp   = Files.createTempDirectory("graft-replay").toString
+    val tmp   = tempDir("graft-replay").toString
     val total = new PaymentPipeline.BalanceStore(spark, s"$tmp/totals")
     val batch = Seq(("ABC", 210L)).toDF("fromAccount", "balance")
     total.append(batch, 0L)
@@ -275,7 +275,7 @@ class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
     // foreachBatch issues) with compaction every 4 batches: correctness must
     // survive each rewrite and the data-file count must be bounded by the
     // cadence, not batch count.
-    val tmp   = Files.createTempDirectory("graft-compact").toString
+    val tmp   = tempDir("graft-compact").toString
     val store = new PaymentPipeline.BalanceStore(spark, s"$tmp/totals", compactEvery = 4L)
     val accounts = Seq("ABC", "XYZ", "DEF")
     (0L to 12L).foreach { b =>
@@ -316,7 +316,7 @@ class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
   test("compaction to one file keeps the logical table") {
     // the read path must be unchanged by the rewrite: the compacted single
     // file serves the exact snapshot the un-compacted appends did
-    val tmp   = Files.createTempDirectory("graft-compact-one").toString
+    val tmp   = tempDir("graft-compact-one").toString
     val store = new PaymentPipeline.BalanceStore(spark, s"$tmp/totals", compactEvery = 0L)
     // per-batch sums: SHARED's running balance after batch b is 100 * b
     (0L to 9L).foreach { b =>
@@ -328,6 +328,11 @@ class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
     assert(recovered.snapshot == before, "the un-compacted changelog must recover the served table")
     store.compact()
     assert(store.dataFileCount == 1, s"expected 1 file, got ${store.dataFileCount}")
+    // the stock local file system writes a `.part-*.crc` sidecar beside each
+    // part file; a replaced file's sidecar must go with it
+    val names   = new java.io.File(s"$tmp/totals").list().toSet
+    val orphans = names.filter(n => n.endsWith(".crc") && !names(n.drop(1).stripSuffix(".crc")))
+    assert(orphans.isEmpty, s"${orphans.size} checksum sidecars outlive their data files")
     assert(store.snapshot == before, "compaction must not change the logical table")
     assert(store.get("SHARED").contains(900L) && store.get("A3").contains(30L))
     val after = recovered
@@ -341,7 +346,7 @@ class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
     // (account, null). It must read as absent in get and snapshot alike.
     implicit val sqlCtx = spark.sqlContext
     val wire = MemoryStream[(String, String)]
-    val tmp  = Files.createTempDirectory("graft-null-amount").toString
+    val tmp  = tempDir("graft-null-amount").toString
     val topo = PaymentPipeline.start(
       PaymentSerde.decodeKafka(wire.toDF().toDF("key", "value")), s"$tmp/ckpt", s"$tmp/sink")
     def record(id: String, from: String, amount: String) =
@@ -363,7 +368,7 @@ class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
     // 4 readers loop on get while the writer appends and compacts after
     // every batch (compactEvery = 1): a read must neither fail nor see a
     // value no batch published.
-    val tmp   = Files.createTempDirectory("graft-race").toString
+    val tmp   = tempDir("graft-race").toString
     val store = new PaymentPipeline.BalanceStore(spark, s"$tmp/totals", compactEvery = 1L)
     // each batch adds 100, so the running balance after batch b is value(b)
     def value(b: Long) = 100L * (b + 1)
@@ -393,7 +398,7 @@ class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("get and snapshot start no Spark job") {
-    val tmp   = Files.createTempDirectory("graft-nojob").toString
+    val tmp   = tempDir("graft-nojob").toString
     val store = new PaymentPipeline.BalanceStore(spark, s"$tmp/totals")
     store.append(Seq(("ABC", 210L), ("XYZ", 800L)).toDF("fromAccount", "balance"), 0L)
     // Count the jobs this thread starts under one job group. The listener
@@ -428,7 +433,7 @@ class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
   test("store before its first commit: empty reads, no-op compaction") {
     // the REST service and snapshot readers can reach the store before the
     // balance query has committed anything — no changelog directory yet
-    val tmp   = Files.createTempDirectory("graft-empty").toString
+    val tmp   = tempDir("graft-empty").toString
     val store = new PaymentPipeline.BalanceStore(spark, s"$tmp/never-written")
     assert(store.get("ABC").isEmpty, "no committed batch must read as 404")
     assert(store.snapshot.isEmpty)

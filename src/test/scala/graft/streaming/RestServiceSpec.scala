@@ -21,22 +21,6 @@ class RestServiceSpec extends AnyFunSuite with SparkSpec {
       HttpResponse.BodyHandlers.ofString()
     )
 
-  /** Raw-socket GET for request lines java.net.URI itself refuses to
-    * build (malformed percent escapes) — the server must still answer
-    * them with a clean status. Returns the status code.
-    */
-  private def rawGet(port: Int, path: String): Int = {
-    val sock = new java.net.Socket("localhost", port)
-    try {
-      val out = sock.getOutputStream
-      out.write(s"GET $path HTTP/1.1\r\nHost: localhost\r\nConnection: close\r\n\r\n".getBytes("US-ASCII"))
-      out.flush()
-      val line = new java.io.BufferedReader(
-        new java.io.InputStreamReader(sock.getInputStream, "US-ASCII")).readLine()
-      line.split(" ")(1).toInt
-    } finally sock.close()
-  }
-
   test("balance endpoint: 200 + Long body for present accounts, 404 for absent (BalanceController contract)") {
     val balances = Map("ABC" -> 210L, "XYZ" -> 800L)
     val svc = new RestService(balances.get, () => "plan").start()
@@ -97,53 +81,11 @@ class RestServiceSpec extends AnyFunSuite with SparkSpec {
     } finally svc.stop()
   }
 
-  test("dim endpoint: 200 + version-at-T JSON, 404 for absent/pre-history, 400 for malformed (BalanceController contract on the SCD tier)") {
-    import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-rest-dim")
-    graft.sources.SessionMemo.deleteOnExit(tmp)
-    val store = new ScdStore(spark, s"$tmp/store", graft.queries.EventQueries.ScdOpenEnd)
-    store.merge(
-      Seq(
-        (1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 10L, 100L),
-        (1L, java.sql.Timestamp.valueOf("2024-01-03 00:00:00"), 11L, 250L))
-        .toDF("user_id", "ts", "event_id", "cents"),
-      0L)
-    val svc = new RestService(_ => None, () => "plan", getDimAt = RestService.dimLookup(store)).start()
-    try {
-      // epoch-µs instant inside v1's interval
-      val usAt = java.sql.Timestamp.valueOf("2024-01-02 00:00:00").getTime * 1000L
-      val r1 = get(svc.boundPort, s"/v1/kafka-streams/dim/1?at=$usAt")
-      assert(r1.statusCode() == 200 && r1.body().contains("\"version\":1")
-        && r1.body().contains("\"cents\":100"), r1.body())
-      // timestamp-literal instant (URL-encoded) inside the open v2
-      val r2 = get(svc.boundPort, "/v1/kafka-streams/dim/1?at=2024-01-03%2012:00:00")
-      assert(r2.statusCode() == 200 && r2.body().contains("\"version\":2")
-        && r2.body().contains("\"cents\":250"), r2.body())
-      // unknown user and pre-history instant are the reference's null→404
-      assert(get(svc.boundPort, s"/v1/kafka-streams/dim/999?at=$usAt").statusCode() == 404)
-      assert(get(svc.boundPort, "/v1/kafka-streams/dim/1?at=2023-01-01%2000:00:00").statusCode() == 404)
-      // malformed user / missing or unparseable instant
-      assert(get(svc.boundPort, s"/v1/kafka-streams/dim/zap?at=$usAt").statusCode() == 400)
-      assert(get(svc.boundPort, "/v1/kafka-streams/dim/1").statusCode() == 400)
-      assert(get(svc.boundPort, "/v1/kafka-streams/dim/1?at=whenever").statusCode() == 400)
-      // a MALFORMED percent escape is the route's documented 400, not a
-      // 500 from a decode throw (the raw query is decoded exactly once,
-      // inside a Try); sent over a raw socket — java.net.URI refuses to
-      // even build these
-      assert(rawGet(svc.boundPort, "/v1/kafka-streams/dim/1?at=2024%") == 400)
-      assert(rawGet(svc.boundPort, "/v1/kafka-streams/dim/1?at=%zz") == 400)
-      // '+'-encoded space (the other standard form-encoding of the
-      // timestamp literal) decodes once to the same instant as %20
-      val r3 = get(svc.boundPort, "/v1/kafka-streams/dim/1?at=2024-01-03+12:00:00")
-      assert(r3.statusCode() == 200 && r3.body().contains("\"version\":2"), r3.body())
-    } finally svc.stop()
-  }
-
   test("end-to-end: HTTP reads see the streaming store's state as batches commit") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[graft.model.PaymentEvent]
-    val tmp   = java.nio.file.Files.createTempDirectory("graft-rest").toString
+    val tmp   = tempDir("graft-rest").toString
     val t     = PaymentPipeline.start(input.toDF(), s"$tmp/ckpt", s"$tmp/sink")
     val svc   = RestService.forTopology(t, "plan").start()
     try {
