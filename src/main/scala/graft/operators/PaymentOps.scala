@@ -11,8 +11,10 @@ import org.apache.spark.sql.types.LongType
   * Streaming (MemoryStream/Kafka in).
   *
   * The payment path is spelled once: [[merged]] (O3–O6), [[routed]]
-  * (O10+O11) and [[balances]] (O7–O9). `PaymentPipeline.start` runs them
-  * over a stream and [[topology]] over a batch. [[branchByCurrency]],
+  * (O10+O11) and [[balances]] (O7–O9). [[topology]] runs them over a batch.
+  * `PaymentPipeline.start` runs [[merged]] and [[routed]] over a stream, and
+  * hands each micro-batch's [[rekeyToAccountAmount]] rows to its
+  * `BalanceStore`, which sums them on the driver as [[balances]] would. [[branchByCurrency]],
   * [[fxConvert]] and [[merge]] are the reference's O4–O6 as separate steps:
   * the board's q06 row runs the first two, and PaymentOpsSpec checks
   * [[merged]] against the three.
@@ -23,9 +25,10 @@ import org.apache.spark.sql.types.LongType
   * and a `unionByName` that adds no shuffle. Catalyst does not fold a
   * self-union, so branches split into frames and merged back read their
   * input once per branch; [[merged]] therefore fuses O4–O6 into one filter
-  * and one projection over a single scan. The only shuffle in the whole
+  * and one projection over a single scan. The only shuffle in the batch
   * topology is the one the semantics require: the groupBy in [[balances]]
-  * (the reference's repartition topic, `PaymentTopology.java:76-77`).
+  * (the reference's repartition topic, `PaymentTopology.java:76-77`). The
+  * stream plans none: its per-batch sum runs on the driver.
   */
 object PaymentOps {
 
@@ -160,10 +163,11 @@ object PaymentOps {
     * reference's `"balance"` KTable (`PaymentTopology.java:75-88`:
     * initializer 0L, aggregator agg+value, no window, no TTL).
     *
-    * Batch: a plain hash aggregate (partial map-side combine + one shuffle).
-    * Streaming: `PaymentPipeline.start` runs it on each micro-batch, with no
-    * state store, and its `BalanceStore` folds the per-batch sums into the
-    * running balances.
+    * Batch: a plain hash aggregate (partial map-side combine + one shuffle),
+    * for [[topology]]. `PaymentPipeline.start` no longer runs it: its
+    * `BalanceStore` collects each micro-batch's [[rekeyToAccountAmount]]
+    * rows in one single-stage job and sums them on the driver by the same
+    * rules (a null amount adds nothing).
     */
   def balances(df: DataFrame): DataFrame =
     rekeyToAccountAmount(df)

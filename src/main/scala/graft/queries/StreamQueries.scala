@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.sources.Tables
-import graft.streaming.CurationStream
+import graft.streaming.{CurationStream, PaymentPipeline}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -89,76 +89,44 @@ object StreamQueries {
     * size state partitions to live-state volume per store, independent of
     * the batch shuffle width. Scoped per run via [[withStatePartitions]] —
     * the fresh checkpoint pins the count at query start, and the session
-    * conf is restored before the registered query returns.
+    * conf is restored before the registered query returns. The same scope
+    * sets the payment path's checkpoint file settings
+    * (`PaymentPipeline.withCheckpointSettings`), measured on these rows in
+    * r17: about half the forked processes of a bench run.
     * `GRAFT_STATE_PARTITIONS` overrides the count — the second measured
     * knob of SCALE.md §v2-premium.
     */
   private val StreamStatePartitions =
     sys.env.get("GRAFT_STATE_PARTITIONS").map(_.toInt).getOrElse(8)
 
-  /** Checkpoint I/O plumbing for the bounded-stream scope (r17, measured —
-    * the two knobs remove LOCAL-ONLY per-file overhead, not work):
-    *
-    *   - `spark.sql.streaming.checkpoint.fileChecksum.enabled=false`
-    *     (Spark 4.0 behavior): 4.1's ChecksumCheckpointFileManager writes a
-    *     `.crc` SIDECAR per checkpoint file through a blocking helper pool
-    *     (`awaitResult` inside every state-store commit in the jstack
-    *     profile) — on the local fs that sidecar is then ALSO checksummed
-    *     by Hadoop (`.delta.crc.crc` files observed), so one delta commit
-    *     costs 4+ file creates. At cloud scale the same sidecars double the
-    *     object-store request rate on the hot path; corruption detection is
-    *     a deployment policy, so it rides an env: `GRAFT_CKPT_CHECKSUM=1`
-    *     restores the 4.1 default.
-    *   - FileSystemBasedCheckpointFileManager instead of the FileContext
-    *     default: on a no-native-lib local fs, every FileContext file
-    *     status shells out `readlink` (fork+exec per offsets/commits/delta
-    *     probe — 21.5k forks per 4-row bench run measured, halved with
-    *     these knobs). The FileSystem-based manager is the documented
-    *     alternative with identical rename-based atomic-write semantics on
-    *     posix; production checkpoint stores (HDFS/S3/DBFS) pick their own
-    *     manager, so the local default only unwinds a Linux-fork artifact.
-    *     `GRAFT_CKPT_FC_MANAGER=1` restores the FileContext default.
-    */
-  private val CkptManagerConfs: Seq[(String, Option[String])] = Seq(
-    "spark.sql.streaming.checkpoint.fileChecksum.enabled" ->
-      (if (sys.env.get("GRAFT_CKPT_CHECKSUM").contains("1")) None else Some("false")),
-    "spark.sql.streaming.checkpointFileManagerClass" ->
-      (if (sys.env.get("GRAFT_CKPT_FC_MANAGER").contains("1")) None
-       else Some("org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")))
-
-  private def withStatePartitions[T](s: SparkSession)(body: => T): T = {
-    val saved    = s.conf.get("spark.sql.shuffle.partitions")
-    val savedAqe = s.conf.get("spark.sql.adaptive.enabled")
-    val savedCkpt = CkptManagerConfs.map { case (k, _) => k -> s.conf.getOption(k) }
-    try {
-      s.conf.set("spark.sql.shuffle.partitions", StreamStatePartitions.toString)
-      CkptManagerConfs.foreach { case (k, v) => v.foreach(s.conf.set(k, _)) }
-      // AQE OFF for the scope by default (r17, measured; GRAFT_STREAM_AQE=1
-      // restores it): the stream itself already runs AQE-disabled
-      // (stateful workloads), so the conf only affects the foreachBatch
-      // reduction frames — which are domain-bounded by design
-      // (closed-window summaries, dimension-sized at ANY corpus size, so
-      // the reasoning is scale-independent). On that many-tiny-stages
-      // shape AQE's per-stage materialize-replan-submit cycle dominates
-      // wall clock: two interleaved A/B rounds on the q171/q216/q217/q219
-      // rows read 56.1 vs 26.7 s and 30.3 vs 16.8 s (on vs off) — ~2x.
-      // The isolated four-axis reduction alone reproduces it (3.4 s
-      // AQE-off vs 4.6-7.5 s AQE-on, identical inputs).
-      s.conf.set("spark.sql.adaptive.enabled",
-        (sys.env.get("GRAFT_STREAM_AQE") match {
-          case Some(v) => v == "1"
-          case None    => false
-        }).toString)
-      body
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", saved)
-      s.conf.set("spark.sql.adaptive.enabled", savedAqe)
-      savedCkpt.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None)    => s.conf.unset(k)
+  private def withStatePartitions[T](s: SparkSession)(body: => T): T =
+    PaymentPipeline.withCheckpointSettings(s) {
+      val saved    = s.conf.get("spark.sql.shuffle.partitions")
+      val savedAqe = s.conf.get("spark.sql.adaptive.enabled")
+      try {
+        s.conf.set("spark.sql.shuffle.partitions", StreamStatePartitions.toString)
+        // AQE OFF for the scope by default (r17, measured; GRAFT_STREAM_AQE=1
+        // restores it): the stream itself already runs AQE-disabled
+        // (stateful workloads), so the conf only affects the foreachBatch
+        // reduction frames — which are domain-bounded by design
+        // (closed-window summaries, dimension-sized at ANY corpus size, so
+        // the reasoning is scale-independent). On that many-tiny-stages
+        // shape AQE's per-stage materialize-replan-submit cycle dominates
+        // wall clock: two interleaved A/B rounds on the q171/q216/q217/q219
+        // rows read 56.1 vs 26.7 s and 30.3 vs 16.8 s (on vs off) — ~2x.
+        // The isolated four-axis reduction alone reproduces it (3.4 s
+        // AQE-off vs 4.6-7.5 s AQE-on, identical inputs).
+        s.conf.set("spark.sql.adaptive.enabled",
+          (sys.env.get("GRAFT_STREAM_AQE") match {
+            case Some(v) => v == "1"
+            case None    => false
+          }).toString)
+        body
+      } finally {
+        s.conf.set("spark.sql.shuffle.partitions", saved)
+        s.conf.set("spark.sql.adaptive.enabled", savedAqe)
       }
     }
-  }
 
   /** Pin the RocksDB state-store provider (required by the state API v2
     * rows) for the scope of `body`, restoring the session conf after.

@@ -2,12 +2,20 @@ package graft.streaming
 
 import graft.model.PaymentSerde
 import graft.operators.PaymentOps
+import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.LocalOutputFile
+import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.UUID
+import scala.collection.mutable
 
 /** Structured-Streaming twin of the reference's runtime
   * (`processor/PaymentTopology.java:39-98` wired by
@@ -16,8 +24,8 @@ import scala.jdk.CollectionConverters._
   * the chain [[PaymentOps.merged]] over an unbounded source, with
   *   - the balance KTable (`PaymentTopology.java:78-88`) held once, in
   *     [[BalanceStore]]: a stateless `foreachBatch` query hands it each
-  *     micro-batch's per-account sums, which it folds into running balances,
-  *     logs to its parquet changelog and serves, standing in for the
+  *     micro-batch's `(fromAccount, amount)` rows, which it sums into running
+  *     balances, logs to its parquet changelog and serves, standing in for the
   *     reference's interactive-query store
   *     (`controller/BalanceController.java:24-33`) — SURVEY.md §7.4 Hard #1;
   *   - sink routing for the FOO/BAR outbound topics ([[PaymentOps.routed]])
@@ -30,15 +38,20 @@ import scala.jdk.CollectionConverters._
   * keeps Spark state.
   *
   * Scale notes: the balance table, like the reference's instance-local
-  * store, lives in this process. Each micro-batch's sums are collected to
-  * the driver, folded into the in-memory index that lookups read, and the
-  * changed keys' running balances are appended to a parquet changelog
-  * stamped with the batchId. A restart reads the changelog back and folds
-  * it on the driver in batch order, and compaction writes the index out,
-  * so Spark only reads and writes its files. The driver's heap therefore
-  * holds one entry per account; a deployment past that size would shard the
-  * index by key across instances, as Kafka Streams shards its stores by
-  * partition.
+  * store, lives in this process. Each micro-batch's `(fromAccount, amount)`
+  * rows are collected to the driver by one single-stage Spark job (no
+  * shuffle), summed per account into the in-memory index that lookups
+  * read, and the changed keys' running balances are written by the driver
+  * as one parquet changelog file stamped with the batchId. A restart reads
+  * the changelog back in one Spark job and folds it on the driver in batch
+  * order; compaction writes the index out from the driver. The driver's
+  * heap therefore holds one entry per account, plus, while a batch is
+  * summed, one row per record of that batch: a catch-up batch (a backlog
+  * taken in one trigger, say after a restart) is bounded only by the
+  * source's rate limit (`maxFilesPerTrigger`, `maxOffsetsPerTrigger`). A
+  * deployment past that size would shard the index by key across
+  * instances, as Kafka Streams shards its stores by partition, and bound
+  * its batches with the source's rate limit.
   */
 object PaymentPipeline {
 
@@ -55,11 +68,15 @@ object PaymentPipeline {
     * the parquet changelog.
     *
     * The balance query's `foreachBatch` hands [[append]] one micro-batch's
-    * per-account sums (deltas). [[append]] collects them in one job, folds
-    * `index(a) + delta` into running balances for the changed keys, appends
-    * those running balances durably to the changelog, and only then
+    * `(fromAccount, amount)` rows, one per record. [[append]] collects them
+    * in one single-stage Spark job and does the rest on the driver: it sums
+    * them per account onto the running balances, writes the changed keys'
+    * running balances to the changelog as one parquet file (under a hidden
+    * name, then renamed into place in one atomic move), and only then
     * publishes the new index with one volatile write: durable first,
-    * visible second. A reader sees the state after some whole batch (the
+    * visible second. The driver so holds one row per record of the batch
+    * while it sums, not one per account; a catch-up batch holds the whole
+    * backlog it took. A reader sees the state after some whole batch (the
     * eventual-consistency window the reference tests tolerate,
     * `KafkaStreamsPaymentIntegrationTest.java:185-188`).
     *
@@ -68,11 +85,15 @@ object PaymentPipeline {
     * its changelog topic (`PaymentTopology.java:78-88`). A delta fold is not
     * idempotent, so the store keeps one invariant: the changelog can rebuild
     * the state before its last batch P as well as the state after it, and
-    * both are kept in memory. Spark replays P when P's append landed
-    * (possibly only in part: a multi-file job commit is not atomic) but its
-    * commit-log entry did not; [[append]] then folds P onto the state before
-    * it, and re-appends rows identical to those that landed, so the replayed
-    * log folds to the same table.
+    * both are kept in memory. Spark replays P when P's append landed but
+    * its commit-log entry did not; [[append]] then folds P onto the state
+    * before it, and re-appends rows identical to those that landed, so the
+    * replayed log folds to the same table. An append is one renamed file,
+    * so it lands whole or not at all; a changelog whose last batch landed
+    * in part (a multi-file Spark append, as earlier versions wrote) folds
+    * the same way. A hidden `.part-*.tmp` file left by a crash mid-write is
+    * invisible to recovery and [[dataFileCount]], and the next compaction
+    * deletes it.
     *
     * Every `compactEvery` batches the changelog is rewritten to the served
     * index, which bounds its files and so the restart's read. A compacted
@@ -91,6 +112,10 @@ object PaymentPipeline {
   final class BalanceStore(spark: SparkSession, dir: String, compactEvery: Long = 16L) {
 
     private val schema = StructType.fromDDL("fromAccount STRING, balance BIGINT, batch_id BIGINT")
+    // the same three columns as parquet types, for the driver's writer
+    private val fileType = MessageTypeParser.parseMessageType(
+      "message spark_schema { optional binary fromAccount (STRING); optional int64 balance; optional int64 batch_id; }")
+    private val hadoopConf = new Configuration() // loaded once, not per write
 
     /** `(fromAccount, balance, …)` rows folded over `index`, in order. */
     private def folded(index: Map[String, Long], rows: Seq[Row]): Map[String, Long] =
@@ -123,67 +148,86 @@ object PaymentPipeline {
     /** Full current state: the served index itself. */
     def snapshot: Map[String, Long] = index
 
-    /** Fold one batch's `(fromAccount, balance)` sums into the table (see
-      * class doc). A null sum leaves its account's balance as it was.
+    /** Sum one batch's `(account, amount)` rows, read by position, into the
+      * table (see class doc). Spark `sum`'s rules: a null amount adds
+      * nothing, and an account whose amounts are all null keeps its balance
+      * or stays absent. One row per account is a batch of sums.
       */
-    private[streaming] def append(sums: Dataset[Row], batchId: Long): Unit = {
+    private[streaming] def append(rows: Dataset[Row], batchId: Long): Unit = {
       require(batchId >= last, s"batch $batchId precedes the changelog's last batch $last")
       val replay = batchId == last
       if (!replay && compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) compact()
-      val base = if (replay) prior else index
-      val rows = sums.select(col("fromAccount"), col("balance")).collect().toSeq.map { r =>
-        val account = r.getString(0)
-        val balance: java.lang.Long =
-          if (r.isNullAt(1)) base.get(account).map(Long.box).orNull
-          else base.getOrElse(account, 0L) + r.getLong(1)
-        Row(account, balance, batchId)
+      val base    = if (replay) prior else index
+      val changed = mutable.HashMap.empty[String, Long]
+      rows.collect().foreach { r =>
+        if (!r.isNullAt(1)) {
+          val account = r.getString(0)
+          changed.update(account, changed.getOrElse(account, base.getOrElse(account, 0L)) + r.getLong(1))
+        }
       }
-      if (rows.nonEmpty) {
-        logged(rows).write.mode("append").parquet(dir)
+      if (changed.nonEmpty) {
+        write(changed, batchId)
         last = batchId
         prior = base
-        index = folded(base, rows)
+        index = base ++ changed
       }
     }
 
     /** Rewrite the changelog to the served index, every row stamped with
       * the changelog's last batch (see class doc). Safe order: snapshot the
-      * current data files, append the index as one file, then delete the
-      * snapshot, each file with its `.crc` sidecar if the file system wrote
-      * one. A crash at any point leaves a changelog that folds to the same
-      * table. The stream calls it only from [[append]], between
-      * batches: a call between an append and its batch's commit would
-      * collapse the rows before that batch, which its replay folds onto.
+      * current data files, write the index as one file, then delete the
+      * snapshot, each file with its `.crc` sidecar if Spark's writer left
+      * one, and any `.part-*.tmp` file a crash mid-write left. A crash at
+      * any point leaves a changelog that folds to the same table. The
+      * stream calls it only from [[append]], between batches: a call
+      * between an append and its batch's commit would collapse the rows
+      * before that batch, which its replay folds onto.
       */
     private[streaming] def compact(): Unit = {
-      val old = partFiles
+      val files = listed
+      val old   = files.filter(isPart)
       if (old.nonEmpty) {
-        logged(index.toSeq.map { case (a, b) => Row(a, b, last) })
-          .coalesce(1)
-          .write
-          .mode("append")
-          .parquet(dir)
+        write(index, last)
         old.foreach { f =>
           f.delete()
           new java.io.File(f.getParentFile, s".${f.getName}.crc").delete()
         }
       }
+      files.filter(f => f.getName.startsWith(".part-") && f.getName.endsWith(".tmp")).foreach(_.delete())
     }
 
-    /** Changelog rows as a frame for a write. */
-    private def logged(rows: Seq[Row]): DataFrame =
-      spark.createDataFrame(rows.asJava, schema)
+    /** Write `(fromAccount, balance)` rows stamped `batchId` as one parquet
+      * file on the driver: to a hidden `.part-….tmp` name that Spark's
+      * reader skips, closed, then moved to `part-<batch>-<uuid>.parquet` in
+      * one atomic rename, so recovery sees the whole file or none of it.
+      */
+    private def write(rows: Iterable[(String, Long)], batchId: Long): Unit = {
+      val root = Files.createDirectories(Paths.get(dir))
+      val name = s"part-$batchId-${UUID.randomUUID}"
+      val tmp  = root.resolve(s".$name.tmp")
+      val out = ExampleParquetWriter
+        .builder(new LocalOutputFile(tmp))
+        .withConf(hadoopConf)
+        .withType(fileType)
+        .withCompressionCodec(CompressionCodecName.SNAPPY)
+        .build()
+      val groups = new SimpleGroupFactory(fileType)
+      try rows.foreach { case (account, balance) =>
+        out.write(groups.newGroup().append("fromAccount", account).append("balance", balance).append("batch_id", batchId))
+      } finally out.close()
+      Files.move(tmp, root.resolve(s"$name.parquet"), StandardCopyOption.ATOMIC_MOVE)
+    }
 
     /** Data files currently in the changelog directory (test/ops surface —
       * the boundedness compaction guarantees is asserted on this).
       */
-    def dataFileCount: Int = partFiles.length
+    def dataFileCount: Int = listed.count(isPart)
 
-    /** The part-* files the writes produced: compaction's delete snapshot. */
-    private def partFiles: Array[java.io.File] =
-      Option(new java.io.File(dir).listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .filter(f => f.isFile && f.getName.startsWith("part-"))
+    private def listed: Array[java.io.File] =
+      Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty[java.io.File])
+
+    /** A part-* file the writes produced: compaction's delete snapshot. */
+    private def isPart(f: java.io.File): Boolean = f.isFile && f.getName.startsWith("part-")
   }
 
   /** Handles to the running topology: the routing query (both outbound
@@ -205,14 +249,58 @@ object PaymentPipeline {
     }
   }
 
+  /** Checkpoint file settings for streaming queries that run on a local
+    * file system, set by [[withCheckpointSettings]]:
+    *   - `spark.sql.streaming.checkpoint.fileChecksum.enabled=false`: no
+    *     Spark checksum file beside each state-store file (Spark 4.0's
+    *     behaviour). `start` keeps no state store; the board's stateful
+    *     streams (`StreamQueries`) do.
+    *   - the FileSystem-based checkpoint file manager instead of the
+    *     FileContext one, which on a local file system without Hadoop's
+    *     native library forks `readlink` on every rename. Both write a file
+    *     under a temporary name and rename it into place. The FileSystem-
+    *     based one writes through the `file://` file system, so on
+    *     `NoCrcLocalFileSystem` the offset and commit logs get no Hadoop
+    *     `.crc` sidecar either; FileContext writes one whatever
+    *     `fs.file.impl` says.
+    *
+    * The trade is corruption detection, not atomicity: a checkpoint file
+    * corrupted on disk is read as it is instead of failing its checksum. A
+    * deployment that wants the check sets the settings on its own session
+    * after this scope, or runs on a store that checks its own bytes (HDFS,
+    * object stores).
+    */
+  private val CheckpointSettings: Seq[(String, String)] = Seq(
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
+    "spark.sql.streaming.checkpointFileManagerClass" -> classOf[FileSystemBasedCheckpointFileManager].getName)
+
+  /** Run `body` (which starts streaming queries) with [[CheckpointSettings]]
+    * set on the session, then restore the session's own values. A query
+    * clones the session when it starts, so a query started in `body` keeps
+    * the settings for its lifetime.
+    */
+  private[graft] def withCheckpointSettings[T](spark: SparkSession)(body: => T): T = {
+    val saved = CheckpointSettings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    CheckpointSettings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
   /** Wire the full reference topology over a streaming payment DataFrame
     * (from [[fromKafka]], a MemoryStream, or any streaming source with the
     * payment schema) as two queries over the same source: the exactly-once
     * routing sink and a stateless balance query that hands each batch's
-    * per-account sums to the [[BalanceStore]], the one copy of the balance
-    * table. A tick is visible once both have committed. Neither query
-    * plans a stateful operator, so no state store pins
-    * `spark.sql.shuffle.partitions` across restarts.
+    * `(fromAccount, amount)` rows to the [[BalanceStore]], the one copy of
+    * the balance table. Each balance batch runs one single-stage Spark job;
+    * the store sums and logs on the driver. A tick is visible once both
+    * queries have committed. Neither query plans a stateful operator, so no
+    * state store pins `spark.sql.shuffle.partitions` across restarts. Both
+    * start under [[withCheckpointSettings]]: no `readlink` fork per
+    * checkpoint file, and no checksum sidecars on a local file system
+    * without Hadoop's checksums (see [[CheckpointSettings]] for the trade).
     *
     * @param sinkDir  rows routed to the FOO/BAR "topics" land in
     *                 `sinkDir/topic=rails-foo-topic/` etc. as parquet —
@@ -232,38 +320,40 @@ object PaymentPipeline {
     val store = new BalanceStore(payments.sparkSession, s"$sinkDir/_balance_state", compactEvery)
 
     val merged = PaymentOps.merged(payments)
-    // Native file sink, not foreachBatch-append: the sink's _spark_metadata
-    // transaction log records exactly which files each batch committed, so a
-    // crash-replayed batch overwrites instead of duplicating (foreachBatch
-    // with blind append would write the batch twice) and readers of sinkDir
-    // see only committed files. partitionBy("topic") keeps both outbound
-    // "topics" in one pass over the tagged union.
-    val routing = PaymentOps
-      .routed(merged)
-      .writeStream
-      .queryName("graft-sink-routing")
-      .format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", s"$checkpointDir/routing")
-      .partitionBy("topic")
-      .start()
+    withCheckpointSettings(payments.sparkSession) {
+      // Native file sink, not foreachBatch-append: the sink's _spark_metadata
+      // transaction log records exactly which files each batch committed, so a
+      // crash-replayed batch overwrites instead of duplicating (foreachBatch
+      // with blind append would write the batch twice) and readers of sinkDir
+      // see only committed files. partitionBy("topic") keeps both outbound
+      // "topics" in one pass over the tagged union.
+      val routing = PaymentOps
+        .routed(merged)
+        .writeStream
+        .queryName("graft-sink-routing")
+        .format("parquet")
+        .option("path", sinkDir)
+        .option("checkpointLocation", s"$checkpointDir/routing")
+        .partitionBy("topic")
+        .start()
 
-    // O7–O9 — re-key in the streaming plan, so Catalyst prunes the decode
-    // to the two columns the sum reads; then a stateless per-batch grouped
-    // sum, which the store folds into the running balances (the KTable),
-    // logs and then serves.
-    val balance = PaymentOps
-      .rekeyToAccountAmount(merged)
-      .writeStream
-      .queryName("graft-balance")
-      .option("checkpointLocation", s"$checkpointDir/balance")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        store.append(PaymentOps.balances(batch), batchId)
-        ()
-      }
-      .start()
+      // O7–O9 — re-key in the streaming plan, so Catalyst prunes the decode
+      // to the two columns the sum reads; the store collects each batch's
+      // rows in one job and sums them into the running balances (the
+      // KTable), logs and then serves them.
+      val balance = PaymentOps
+        .rekeyToAccountAmount(merged)
+        .writeStream
+        .queryName("graft-balance")
+        .option("checkpointLocation", s"$checkpointDir/balance")
+        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+          store.append(batch, batchId)
+          ()
+        }
+        .start()
 
-    RunningTopology(routing, balance, store)
+      RunningTopology(routing, balance, store)
+    }
   }
 
   /** O1 — the Kafka source decoded to payment columns (requires the

@@ -32,7 +32,7 @@ class GraphOpsSpec extends AnyFunSuite with SparkSpec {
     // depth 12 -> well past 2 rounds of label propagation, every round
     // re-checkpointed to the reliable dir (the cluster-deployment mode);
     // result must be identical to the localCheckpoint path.
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val dir = tempDir("graft-ckpt").toString
     val n   = 12L
     val comp = GraphOps
       .connectedComponents(

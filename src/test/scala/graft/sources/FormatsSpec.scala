@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.file.Files
 
 /** Source-format coverage beyond parquet: the engine reads the same tables
   * through every format Spark ships a native reader for, with identical
@@ -28,7 +27,7 @@ class FormatsSpec extends AnyFunSuite with SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("ORC round-trip preserves values and pushes predicates into the scan") {
-    val tmp    = Files.createTempDirectory("graft-orc").toString
+    val tmp    = tempDir("graft-orc").toString
     val orders = Tables.orders(spark, dir)
     orders.write.mode("overwrite").orc(s"$tmp/orders")
 
@@ -45,7 +44,7 @@ class FormatsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("JSON-lines round-trip with an explicit schema (no inference pass)") {
-    val tmp    = Files.createTempDirectory("graft-json").toString
+    val tmp    = tempDir("graft-json").toString
     val orders = Tables.orders(spark, dir)
     orders.write.mode("overwrite").json(s"$tmp/orders")
 
@@ -59,7 +58,7 @@ class FormatsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("CSV round-trip with header + explicit schema + timestamp format") {
-    val tmp    = Files.createTempDirectory("graft-csv").toString
+    val tmp    = tempDir("graft-csv").toString
     val orders = Tables.orders(spark, dir)
     val tsFmt  = "yyyy-MM-dd HH:mm:ss"
     orders.write
@@ -90,7 +89,7 @@ class FormatsSpec extends AnyFunSuite with SparkSpec {
     // additive-evolution shape a long-lived table accumulates. A merged
     // read must surface the union schema with nulls for the missing
     // column, and a plain read must still work pinned to either file.
-    val tmp = Files.createTempDirectory("graft-evolve").toString
+    val tmp = tempDir("graft-evolve").toString
     Seq((1L, "x"), (2L, "y")).toDF("id", "a").write.parquet(s"$tmp/t/gen=1")
     Seq((3L, "z", 30L), (4L, "w", 40L)).toDF("id", "a", "b").write.parquet(s"$tmp/t/gen=2")
     val merged = spark.read.option("mergeSchema", "true").parquet(s"$tmp/t")
@@ -114,7 +113,7 @@ class FormatsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("malformed JSON records: PERMISSIVE quarantines to _corrupt_record, FAILFAST throws") {
-    val tmp  = Files.createTempDirectory("graft-corrupt").toString
+    val tmp  = tempDir("graft-corrupt").toString
     val path = s"$tmp/events.json"
     java.nio.file.Files.write(
       java.nio.file.Paths.get(path),

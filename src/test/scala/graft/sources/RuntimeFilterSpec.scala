@@ -4,7 +4,6 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.file.Files
 
 /** Runtime filtering proofs — the two Catalyst features that turn a full
   * fact scan into a pruned one at execution time, both load-bearing at
@@ -36,7 +35,7 @@ class RuntimeFilterSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("join against a filtered dim dynamically prunes fact partitions (DPP)") {
-    val tmp = Files.createTempDirectory("graft-dpp").toString
+    val tmp = tempDir("graft-dpp").toString
     Sinks.writePartitioned(
       Tables.orders(spark, "/root/testdata/sf0.001"),
       s"$tmp/orders",

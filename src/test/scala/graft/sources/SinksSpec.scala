@@ -10,7 +10,7 @@ class SinksSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
   test("partitioned write enables partition pruning on read") {
-    val tmp = Files.createTempDirectory("graft-part").toString
+    val tmp = tempDir("graft-part").toString
     val df  = Tables.orders(spark, "/root/testdata/sf0.001")
     Sinks.writePartitioned(df, s"$tmp/orders", Seq("o_orderstatus"))
 
@@ -65,7 +65,7 @@ class SinksSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("compactFiles bin-packs a shattered table without changing its contents") {
-    val tmp  = Files.createTempDirectory("graft-compact").toString
+    val tmp  = tempDir("graft-compact").toString
     val path = s"$tmp/events"
     val src  = Tables.events(spark, "/root/testdata/sf0.001")
     src.repartition(32).write.parquet(path) // the streaming-sink shatter shape
@@ -79,7 +79,7 @@ class SinksSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("compactFiles refuses to run over an interrupted compaction's leftovers") {
-    val tmp  = Files.createTempDirectory("graft-compact-rerun").toString
+    val tmp  = tempDir("graft-compact-rerun").toString
     val path = s"$tmp/events"
     Tables.events(spark, "/root/testdata/sf0.001").limit(100).repartition(4).write.parquet(path)
     // simulate a crash mid-swap: originals stranded in .compact-trash
@@ -126,7 +126,7 @@ class SinksSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("Z-order layout skips files on BOTH dimensions; a linear sort only on its leading column") {
-    val tmp = Files.createTempDirectory("graft-zorder").toString
+    val tmp = tempDir("graft-zorder").toString
     // uniform 128x128 grid — every (a, b) combination once
     val grid = spark.range(128L * 128L)
       .select((col("id") / 128).cast("long").as("a"), (col("id") % 128).cast("long").as("b"))

@@ -8,7 +8,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.file.Files
 
 /** BACKFILL pattern — the operational mode every production stream needs:
   * run the SAME topology code as a self-terminating catch-up job with
@@ -24,7 +23,7 @@ class BackfillSpec extends AnyFunSuite with SparkSpec {
   private val schema = Encoders.product[PaymentEvent].schema
 
   test("AvailableNow backfill: self-terminates, second run picks up only new files") {
-    val tmp = Files.createTempDirectory("graft-backfill").toString
+    val tmp = tempDir("graft-backfill").toString
     val in  = s"$tmp/in"
 
     def land(events: PaymentEvent*): Unit =

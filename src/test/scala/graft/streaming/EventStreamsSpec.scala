@@ -88,7 +88,7 @@ class EventStreamsSpec extends AnyFunSuite with SparkSpec {
   test("trendingTerms: top-k tokens per window, emitted only when the window closes") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Timestamp, String)]
-    val tmp   = java.nio.file.Files.createTempDirectory("graft-trending").toString
+    val tmp   = tempDir("graft-trending").toString
     val out   = scala.collection.mutable.ArrayBuffer.empty[(Timestamp, String, Long, Long)]
     val query = EventStreams.trendingTerms(
       input.toDF().toDF("ts", "text"),

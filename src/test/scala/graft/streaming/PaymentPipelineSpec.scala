@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.model.{PaymentEvent, PaymentSerde}
+import graft.sources.NoCrcLocalFileSystem
 import org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec
 import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -173,27 +174,33 @@ class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
     replayBatchOne("graft-crash-replay", Seq(p6), Map("ABC" -> 250L, "XYZ" -> 800L))(_ => ())
   }
 
-  /** Batch 1 touches two accounts, so its append writes two one-row part
-    * files; losing one of them is a multi-file job commit cut short.
-    */
+  /** Batch 1 touches two accounts. */
   private val touchTwo = Seq(
     PaymentEvent("p6", 40L, "GBP", "DEF", "ABC", "BANK_RAILS_FOO"),
     PaymentEvent("p7", 100L, "USD", "DEF", "XYZ", "BANK_RAILS_BAR"))
 
-  /** Delete one of batch 1's two append files (a compacted file holds both
-    * accounts in one file, so it is never picked).
+  /** Leave batch 1's append landed in part, as a multi-file Spark append cut
+    * short leaves it (the changelog an earlier version of the store wrote,
+    * which a restart after an upgrade reads). The store writes an append as
+    * one renamed file, so first rewrite batch 1's file as two one-row
+    * `part-` files with Spark's writer, then delete one of them. A
+    * compacted file is stamped 0, so it is never picked.
     */
   private def dropOneBatchOneFile(sink: String): Unit = {
     val log = new java.io.File(s"$sink/_balance_state")
-    val batchOne = log.listFiles().filter { f =>
-      f.getName.startsWith("part-") && {
-        val rows = spark.read.parquet(f.getPath)
-        rows.count() == 1 && rows.filter($"batch_id" === 1L).count() == 1
-      }
+    def batchOne = log.listFiles().filter { f =>
+      f.getName.startsWith("part-") && spark.read.parquet(f.getPath).filter($"batch_id" === 1L).count() > 0
     }
-    assert(batchOne.length == 2, s"batch 1 should span two files: ${batchOne.map(_.getName).toSeq}")
-    assert(batchOne.head.delete())
-    new java.io.File(log, s".${batchOne.head.getName}.crc").delete()
+    val appended = batchOne
+    assert(appended.length == 1, s"batch 1 should be one file: ${appended.map(_.getName).toSeq}")
+    val rows = spark.read.parquet(appended.head.getPath).collect()
+    assert(rows.length == 2, s"batch 1 should hold two rows: ${rows.toSeq}")
+    rows.foreach(r => spark.createDataFrame(java.util.List.of(r), r.schema).write.mode("append").parquet(log.getPath))
+    assert(appended.head.delete())
+    val split = batchOne
+    assert(split.length == 2, s"batch 1 should span two files: ${split.map(_.getName).toSeq}")
+    assert(split.head.delete())
+    new java.io.File(log, s".${split.head.getName}.crc").delete()
   }
 
   test("a batch replayed after its changelog append landed in part is folded once") {
@@ -328,8 +335,8 @@ class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
     assert(recovered.snapshot == before, "the un-compacted changelog must recover the served table")
     store.compact()
     assert(store.dataFileCount == 1, s"expected 1 file, got ${store.dataFileCount}")
-    // the stock local file system writes a `.part-*.crc` sidecar beside each
-    // part file; a replaced file's sidecar must go with it
+    // no `.crc` sidecar may outlive its data file (Spark's writer on the
+    // stock local file system leaves one beside each part file it writes)
     val names   = new java.io.File(s"$tmp/totals").list().toSet
     val orphans = names.filter(n => n.endsWith(".crc") && !names(n.drop(1).stripSuffix(".crc")))
     assert(orphans.isEmpty, s"${orphans.size} checksum sidecars outlive their data files")
@@ -397,37 +404,125 @@ class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
     assert(store.get("ABC").contains(value(batches)))
   }
 
-  test("get and snapshot start no Spark job") {
-    val tmp   = tempDir("graft-nojob").toString
-    val store = new PaymentPipeline.BalanceStore(spark, s"$tmp/totals")
-    store.append(Seq(("ABC", 210L), ("XYZ", 800L)).toDF("fromAccount", "balance"), 0L)
-    // Count the jobs this thread starts under one job group. The listener
-    // bus delivers events in order, so once a marker job started after the
-    // reads has been seen, every job the reads started has been counted.
+  /** The Spark jobs started under job group `group` while `body` runs. The
+    * listener bus delivers events in order, so once a marker job started
+    * after `body` has been seen, every job `body` started has been counted.
+    */
+  private def jobsStarted(group: String)(body: => Unit): Int = {
     val jobs   = new java.util.concurrent.atomic.AtomicInteger(0)
     val marker = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some("graft-nojob-reads")  => jobs.incrementAndGet()
-          case Some("graft-nojob-marker") => marker.countDown()
+          case Some(`group`)              => jobs.incrementAndGet()
+          case Some("graft-jobs-marker") => marker.countDown()
           case _                          => ()
         }
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      spark.sparkContext.setJobGroup("graft-nojob-reads", "reads")
-      (1 to 100).foreach(i => store.get(if (i % 2 == 0) "ABC" else "NOPE"))
-      val snap = store.snapshot
-      spark.sparkContext.setJobGroup("graft-nojob-marker", "marker")
+      body
+      spark.sparkContext.setJobGroup("graft-jobs-marker", "marker")
       spark.range(1).count()
       assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job never seen")
-      assert(snap == Map("ABC" -> 210L, "XYZ" -> 800L))
-      assert(jobs.get == 0, s"reads started ${jobs.get} Spark jobs")
+      jobs.get
     } finally {
       spark.sparkContext.clearJobGroup()
       spark.sparkContext.removeSparkListener(listener)
     }
+  }
+
+  test("get and snapshot start no Spark job") {
+    val tmp   = tempDir("graft-nojob").toString
+    val store = new PaymentPipeline.BalanceStore(spark, s"$tmp/totals")
+    store.append(Seq(("ABC", 210L), ("XYZ", 800L)).toDF("fromAccount", "balance"), 0L)
+    var snap = Map.empty[String, Long]
+    val jobs = jobsStarted("graft-nojob-reads") {
+      spark.sparkContext.setJobGroup("graft-nojob-reads", "reads")
+      (1 to 100).foreach(i => store.get(if (i % 2 == 0) "ABC" else "NOPE"))
+      snap = store.snapshot
+    }
+    assert(snap == Map("ABC" -> 210L, "XYZ" -> 800L))
+    assert(jobs == 0, s"reads started $jobs Spark jobs")
+  }
+
+  test("a balance batch through start runs one Spark job") {
+    // the stream thread runs each batch's jobs under the query's run id as
+    // job group: one collect, then the sum, the changelog write and the
+    // publish on the driver
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[PaymentEvent]
+    val tmp   = tempDir("graft-onejob").toString
+    val topo  = PaymentPipeline.start(input.toDF(), s"$tmp/ckpt", s"$tmp/sink")
+    try {
+      val jobs = jobsStarted(topo.balance.runId.toString) {
+        input.addData(golden: _*)
+        topo.processAllAvailable()
+      }
+      assert(topo.store.snapshot == Map("ABC" -> 210L, "XYZ" -> 800L))
+      assert(jobs == 1, s"one balance batch ran $jobs Spark jobs")
+    } finally topo.stop()
+  }
+
+  test("append sums an account that repeats within one batch") {
+    // start hands the store one row per record, not per account; null
+    // amounts add nothing, as in Spark's sum. The store reads the columns
+    // by position, so they carry the names the other tests give them.
+    val tmp   = tempDir("graft-repeat").toString
+    val store = new PaymentPipeline.BalanceStore(spark, s"$tmp/totals")
+    def rows(rs: (String, Option[Long])*) = rs.toDF("fromAccount", "balance")
+    store.append(rows(("ABC", Some(100L)), ("XYZ", Some(5L)), ("ABC", Some(50L)), ("ABC", None), ("NUL", None)), 0L)
+    assert(store.snapshot == Map("ABC" -> 150L, "XYZ" -> 5L), s"got ${store.snapshot}")
+    store.append(rows(("ABC", Some(10L)), ("ABC", Some(1L)), ("XYZ", None)), 1L)
+    assert(store.snapshot == Map("ABC" -> 161L, "XYZ" -> 5L), s"got ${store.snapshot}")
+    val reopened = new PaymentPipeline.BalanceStore(spark, s"$tmp/totals")
+    assert(reopened.snapshot == Map("ABC" -> 161L, "XYZ" -> 5L), s"recovered ${reopened.snapshot}")
+  }
+
+  test("start's checkpoint logs carry no checksum sidecar, and the session keeps its settings") {
+    // Run the queries on a local file system without Hadoop's checksums, as
+    // perfbench and graft.Bench do (NoCrcLocalFileSystem). The FileSystem-
+    // based checkpoint manager then writes no `.N.crc` sidecar, while the
+    // FileContext one writes one per file through Hadoop's ChecksumFs,
+    // whatever `fs.file.impl` says. Spark's own checksum files (the
+    // fileChecksum setting) are written only for state stores.
+    implicit val sqlCtx = spark.sqlContext
+    val keys   = Seq("spark.sql.streaming.checkpoint.fileChecksum.enabled", "spark.sql.streaming.checkpointFileManagerClass")
+    val before = keys.map(spark.conf.getOption)
+    val noCrc  = Seq("fs.file.impl" -> classOf[NoCrcLocalFileSystem].getName, "fs.file.impl.disable.cache" -> "true")
+    val input  = MemoryStream[PaymentEvent]
+    val tmp    = tempDir("graft-ckpt-crc").toString
+    noCrc.foreach { case (k, v) => spark.conf.set(k, v) }
+    val topo =
+      try PaymentPipeline.start(input.toDF(), s"$tmp/ckpt", s"$tmp/sink")
+      finally noCrc.foreach { case (k, _) => spark.conf.unset(k) }
+    try {
+      input.addData(golden: _*)
+      topo.processAllAvailable()
+    } finally topo.stop()
+    val logs = for (q <- Seq("routing", "balance"); d <- Seq("commits", "offsets")) yield new java.io.File(s"$tmp/ckpt/$q/$d")
+    val names    = logs.flatMap(d => d.list().toSeq.map(n => s"${d.getParentFile.getName}/${d.getName}/$n"))
+    val sidecars = names.filter(n => n.endsWith(".crc") || n.contains("checksum"))
+    assert(names.exists(_.endsWith("commits/0")), s"no commit written: $names")
+    assert(sidecars.isEmpty, s"checksum sidecars: $sidecars")
+    assert(keys.map(spark.conf.getOption) == before, "start changed the session's checkpoint settings")
+  }
+
+  test("a leftover .part-*.tmp file is ignored by recovery and removed by the next compaction") {
+    val tmp   = tempDir("graft-leftover").toString
+    val dir   = s"$tmp/totals"
+    val store = new PaymentPipeline.BalanceStore(spark, dir, compactEvery = 0L)
+    store.append(Seq(("ABC", 210L)).toDF("fromAccount", "balance"), 0L)
+    // a crash mid-write leaves a hidden file cut short
+    val leftover = new java.io.File(dir, ".part-1-crashed.tmp")
+    Files.write(leftover.toPath, "PAR1 cut short".getBytes("UTF-8"))
+    val reopened = new PaymentPipeline.BalanceStore(spark, dir, compactEvery = 0L)
+    assert(reopened.snapshot == Map("ABC" -> 210L), s"recovered ${reopened.snapshot}")
+    assert(reopened.dataFileCount == 1, s"counted ${reopened.dataFileCount} data files")
+    reopened.compact()
+    assert(!leftover.exists(), "compaction left the crashed write behind")
+    assert(reopened.dataFileCount == 1)
+    assert(new PaymentPipeline.BalanceStore(spark, dir).snapshot == Map("ABC" -> 210L))
   }
 
   test("store before its first commit: empty reads, no-op compaction") {

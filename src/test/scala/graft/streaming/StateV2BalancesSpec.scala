@@ -5,7 +5,6 @@ import graft.model.PaymentEvent
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.file.Files
 
 /** The v2 (`transformWithState`) TTL balance operator must honor the SAME
   * contract as the v1 (`flatMapGroupsWithState`) twin — both scenarios here
@@ -37,7 +36,7 @@ class StateV2BalancesSpec extends AnyFunSuite with SparkSpec {
     withRocksDb {
       implicit val sqlCtx = spark.sqlContext
       val input = MemoryStream[StatefulBalances.TimedPayment]
-      val tmp   = Files.createTempDirectory("graft-tws").toString
+      val tmp   = tempDir("graft-tws").toString
       val query = StateV2Balances
         .runningBalancesTtl(input.toDS(), java.time.Duration.ofSeconds(30))
         .writeStream
@@ -70,7 +69,7 @@ class StateV2BalancesSpec extends AnyFunSuite with SparkSpec {
     withRocksDb {
       implicit val sqlCtx = spark.sqlContext
       val input = MemoryStream[StatefulBalances.TimedPayment]
-      val tmp   = Files.createTempDirectory("graft-tws-late").toString
+      val tmp   = tempDir("graft-tws-late").toString
       val query = StateV2Balances
         .runningBalancesTtl(
           input.toDS(),

@@ -7,7 +7,6 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
 
-import java.nio.file.Files
 
 class StatefulBalancesSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -28,7 +27,7 @@ class StatefulBalancesSpec extends AnyFunSuite with SparkSpec {
     )
     try {
       val input = MemoryStream[PaymentEvent]
-      val tmp   = Files.createTempDirectory("graft-rocks").toString
+      val tmp   = tempDir("graft-rocks").toString
       val query = graft.operators.PaymentOps
         .balances(input.toDF())
         .writeStream
@@ -68,7 +67,7 @@ class StatefulBalancesSpec extends AnyFunSuite with SparkSpec {
   test("runningBalancesTtl: keys idle past the watermark TTL are evicted and re-initialize from zero") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[StatefulBalances.TimedPayment]
-    val tmp   = Files.createTempDirectory("graft-ttl").toString
+    val tmp   = tempDir("graft-ttl").toString
     val query = StatefulBalances
       .runningBalancesTtl(input.toDS(), java.time.Duration.ofSeconds(30))
       .writeStream
@@ -103,7 +102,7 @@ class StatefulBalancesSpec extends AnyFunSuite with SparkSpec {
     // advance in batch 3 would evict an ACTIVE key.
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[StatefulBalances.TimedPayment]
-    val tmp   = Files.createTempDirectory("graft-ttl-late").toString
+    val tmp   = tempDir("graft-ttl-late").toString
     val query = StatefulBalances
       .runningBalancesTtl(
         input.toDS(),
@@ -146,7 +145,7 @@ class StatefulBalancesSpec extends AnyFunSuite with SparkSpec {
     )
     try {
       val input = MemoryStream[StatefulBalances.TimedPayment]
-      val tmp   = Files.createTempDirectory("graft-ttl-rocks").toString
+      val tmp   = tempDir("graft-ttl-rocks").toString
       val query = StatefulBalances
         .runningBalancesTtl(input.toDS(), java.time.Duration.ofMinutes(10))
         .writeStream
@@ -187,7 +186,7 @@ class StatefulBalancesSpec extends AnyFunSuite with SparkSpec {
     // no-TTL semantics). Within one in-window batch they must agree.
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(String, java.sql.Timestamp)]
-    val tmp   = Files.createTempDirectory("graft-wmdedup").toString
+    val tmp   = tempDir("graft-wmdedup").toString
     val query = input
       .toDF()
       .toDF("k", "ts")
@@ -209,7 +208,7 @@ class StatefulBalancesSpec extends AnyFunSuite with SparkSpec {
   test("streamingDedup: replayed keys are dropped across batches") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[PaymentEvent]
-    val tmp   = Files.createTempDirectory("graft-dedup").toString
+    val tmp   = tempDir("graft-dedup").toString
     val query = StatefulBalances
       .streamingDedup(input.toDS())
       .writeStream

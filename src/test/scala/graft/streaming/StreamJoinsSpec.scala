@@ -90,7 +90,7 @@ class StreamJoinsSpec extends AnyFunSuite with SparkSpec {
 
   test("stream-static as-of enrich: latest static row at-or-before each event, per micro-batch") {
     implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft-asof-enrich").toString
+    val tmp = tempDir("graft-asof-enrich").toString
     // static price history: (sym, price_ts, price_id) — two symbols, two eras
     val static = Seq(
       (1L, ts(0), 100L), (1L, ts(60), 101L),
@@ -118,7 +118,7 @@ class StreamJoinsSpec extends AnyFunSuite with SparkSpec {
 
   test("as-of enrich across batch boundaries: late static rows apply from the next batch; late stream rows always enrich") {
     implicit val sqlCtx = spark.sqlContext
-    val tmp       = java.nio.file.Files.createTempDirectory("graft-asof-late").toString
+    val tmp       = tempDir("graft-asof-late").toString
     val staticDir = s"$tmp/prices"
     // era 1 on disk before the stream starts
     Seq((1L, ts(0), 100L)).toDF("sym", "price_ts", "price_id")
