@@ -165,9 +165,10 @@ object PaymentOps {
     *
     * Batch: a plain hash aggregate (partial map-side combine + one shuffle),
     * for [[topology]]. `PaymentPipeline.start` no longer runs it: its
-    * `BalanceStore` collects each micro-batch's [[rekeyToAccountAmount]]
-    * rows in one single-stage job and sums them on the driver by the same
-    * rules (a null amount adds nothing).
+    * `BalanceStore` sums each micro-batch's [[rekeyToAccountAmount]] rows
+    * per partition in one single-stage job and adds the sums on the driver
+    * by the same rules (a null amount adds nothing). The store drops a null
+    * account, which this aggregate keeps as a group of its own.
     */
   def balances(df: DataFrame): DataFrame =
     rekeyToAccountAmount(df)

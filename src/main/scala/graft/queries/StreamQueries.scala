@@ -92,7 +92,11 @@ object StreamQueries {
     * conf is restored before the registered query returns. The same scope
     * sets the payment path's checkpoint file settings
     * (`PaymentPipeline.withCheckpointSettings`), measured on these rows in
-    * r17: about half the forked processes of a bench run.
+    * r17: about half the forked processes of a bench run, and turns off
+    * Spark's checksum file beside each state-store file
+    * (`spark.sql.streaming.checkpoint.fileChecksum.enabled`, Spark 4.0's
+    * behaviour): a corrupted state file is read as it is instead of
+    * failing its checksum.
     * `GRAFT_STATE_PARTITIONS` overrides the count — the second measured
     * knob of SCALE.md §v2-premium.
     */
@@ -101,10 +105,12 @@ object StreamQueries {
 
   private def withStatePartitions[T](s: SparkSession)(body: => T): T =
     PaymentPipeline.withCheckpointSettings(s) {
-      val saved    = s.conf.get("spark.sql.shuffle.partitions")
-      val savedAqe = s.conf.get("spark.sql.adaptive.enabled")
+      val saved         = s.conf.get("spark.sql.shuffle.partitions")
+      val savedAqe      = s.conf.get("spark.sql.adaptive.enabled")
+      val savedChecksum = s.conf.get(StateFileChecksum)
       try {
         s.conf.set("spark.sql.shuffle.partitions", StreamStatePartitions.toString)
+        s.conf.set(StateFileChecksum, "false")
         // AQE OFF for the scope by default (r17, measured; GRAFT_STREAM_AQE=1
         // restores it): the stream itself already runs AQE-disabled
         // (stateful workloads), so the conf only affects the foreachBatch
@@ -125,8 +131,11 @@ object StreamQueries {
       } finally {
         s.conf.set("spark.sql.shuffle.partitions", saved)
         s.conf.set("spark.sql.adaptive.enabled", savedAqe)
+        s.conf.set(StateFileChecksum, savedChecksum)
       }
     }
+
+  private val StateFileChecksum = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
 
   /** Pin the RocksDB state-store provider (required by the state API v2
     * rows) for the scope of `body`, restoring the session conf after.

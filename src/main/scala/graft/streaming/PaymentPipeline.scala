@@ -39,19 +39,20 @@ import scala.collection.mutable
   *
   * Scale notes: the balance table, like the reference's instance-local
   * store, lives in this process. Each micro-batch's `(fromAccount, amount)`
-  * rows are collected to the driver by one single-stage Spark job (no
-  * shuffle), summed per account into the in-memory index that lookups
-  * read, and the changed keys' running balances are written by the driver
-  * as one parquet changelog file stamped with the batchId. A restart reads
-  * the changelog back in one Spark job and folds it on the driver in batch
-  * order; compaction writes the index out from the driver. The driver's
-  * heap therefore holds one entry per account, plus, while a batch is
-  * summed, one row per record of that batch: a catch-up batch (a backlog
-  * taken in one trigger, say after a restart) is bounded only by the
-  * source's rate limit (`maxFilesPerTrigger`, `maxOffsetsPerTrigger`). A
-  * deployment past that size would shard the index by key across
-  * instances, as Kafka Streams shards its stores by partition, and bound
-  * its batches with the source's rate limit.
+  * rows are summed per account within each source partition and collected
+  * to the driver by one single-stage Spark job (no shuffle), added to the
+  * in-memory index that lookups read, and the changed keys' running
+  * balances are written by the driver as one parquet changelog file
+  * stamped with the batchId. A restart reads the changelog back in one
+  * Spark job and folds it on the driver in batch order; compaction writes
+  * the index out from the driver. The driver's heap therefore holds one
+  * entry per account, plus, while a batch is summed, one row per account
+  * and partition of that batch: a catch-up batch (a backlog taken in one
+  * trigger, say after a restart) brings up to one row per account in each
+  * of its partitions, never more than its records. A deployment past that
+  * size would shard the index by key across instances, as Kafka Streams
+  * shards its stores by partition, and bound its batches with the source's
+  * rate limit (`maxFilesPerTrigger`, `maxOffsetsPerTrigger`).
   */
 object PaymentPipeline {
 
@@ -68,16 +69,17 @@ object PaymentPipeline {
     * the parquet changelog.
     *
     * The balance query's `foreachBatch` hands [[append]] one micro-batch's
-    * `(fromAccount, amount)` rows, one per record. [[append]] collects them
-    * in one single-stage Spark job and does the rest on the driver: it sums
-    * them per account onto the running balances, writes the changed keys'
-    * running balances to the changelog as one parquet file (under a hidden
-    * name, then renamed into place in one atomic move), and only then
-    * publishes the new index with one volatile write: durable first,
-    * visible second. The driver so holds one row per record of the batch
-    * while it sums, not one per account; a catch-up batch holds the whole
-    * backlog it took. A reader sees the state after some whole batch (the
-    * eventual-consistency window the reference tests tolerate,
+    * `(fromAccount, amount)` rows, one per record. [[append]] sums them per
+    * account within each partition and collects the sums in one
+    * single-stage Spark job, then does the rest on the driver: it adds them
+    * onto the running balances, writes the changed keys' running balances
+    * to the changelog as one parquet file (under a hidden name, then
+    * renamed into place in one atomic move), and only then publishes the
+    * new index with one volatile write: durable first, visible second. The
+    * driver so holds one row per account and partition of the batch while
+    * it sums; a catch-up batch over many files brings one row per account
+    * in each of its partitions. A reader sees the state after some whole
+    * batch (the eventual-consistency window the reference tests tolerate,
     * `KafkaStreamsPaymentIntegrationTest.java:185-188`).
     *
     * The changelog is the recovery log: a new store reads it once and
@@ -105,7 +107,10 @@ object PaymentPipeline {
     * deleting files races with no lookup.
     *
     * A null balance (an account whose only amounts decoded to null) reads
-    * as absent.
+    * as absent. A record with a null account adds to no balance, as Kafka
+    * Streams' grouped aggregation drops a record whose key is null; a null
+    * account row in a changelog an earlier version wrote is skipped the
+    * same way.
     *
     * @param compactEvery rewrite cadence in batches; <= 0 disables.
     */
@@ -120,7 +125,9 @@ object PaymentPipeline {
     /** `(fromAccount, balance, …)` rows folded over `index`, in order. */
     private def folded(index: Map[String, Long], rows: Seq[Row]): Map[String, Long] =
       rows.foldLeft(index) { (m, r) =>
-        if (r.isNullAt(1)) m - r.getString(0) else m.updated(r.getString(0), r.getLong(1))
+        if (r.isNullAt(0)) m
+        else if (r.isNullAt(1)) m - r.getString(0)
+        else m.updated(r.getString(0), r.getLong(1))
       }
 
     // The changelog's last batch P (-1 before the first) and the table
@@ -151,7 +158,8 @@ object PaymentPipeline {
     /** Sum one batch's `(account, amount)` rows, read by position, into the
       * table (see class doc). Spark `sum`'s rules: a null amount adds
       * nothing, and an account whose amounts are all null keeps its balance
-      * or stays absent. One row per account is a batch of sums.
+      * or stays absent. A null account adds to no balance. One row per
+      * account is a batch of sums.
       */
     private[streaming] def append(rows: Dataset[Row], batchId: Long): Unit = {
       require(batchId >= last, s"batch $batchId precedes the changelog's last batch $last")
@@ -159,11 +167,8 @@ object PaymentPipeline {
       if (!replay && compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) compact()
       val base    = if (replay) prior else index
       val changed = mutable.HashMap.empty[String, Long]
-      rows.collect().foreach { r =>
-        if (!r.isNullAt(1)) {
-          val account = r.getString(0)
-          changed.update(account, changed.getOrElse(account, base.getOrElse(account, 0L)) + r.getLong(1))
-        }
+      rows.rdd.mapPartitions(partitionSums).collect().foreach { case (account, amount) =>
+        changed.update(account, changed.getOrElse(account, base.getOrElse(account, 0L)) + amount)
       }
       if (changed.nonEmpty) {
         write(changed, batchId)
@@ -230,6 +235,21 @@ object PaymentPipeline {
     private def isPart(f: java.io.File): Boolean = f.isFile && f.getName.startsWith("part-")
   }
 
+  /** One partition's `(account, amount)` rows summed per account, on the
+    * executor: rows with a null account or a null amount add nothing, and
+    * an account with no other row yields none.
+    */
+  private def partitionSums(rows: Iterator[Row]): Iterator[(String, Long)] = {
+    val sums = mutable.HashMap.empty[String, Long]
+    rows.foreach { r =>
+      if (!r.isNullAt(0) && !r.isNullAt(1)) {
+        val account = r.getString(0)
+        sums.update(account, sums.getOrElse(account, 0L) + r.getLong(1))
+      }
+    }
+    sums.iterator
+  }
+
   /** Handles to the running topology: the routing query (both outbound
     * topics in one partitioned write), the balance query, and the
     * queryable store.
@@ -249,45 +269,35 @@ object PaymentPipeline {
     }
   }
 
-  /** Checkpoint file settings for streaming queries that run on a local
-    * file system, set by [[withCheckpointSettings]]:
-    *   - `spark.sql.streaming.checkpoint.fileChecksum.enabled=false`: no
-    *     Spark checksum file beside each state-store file (Spark 4.0's
-    *     behaviour). `start` keeps no state store; the board's stateful
-    *     streams (`StreamQueries`) do.
-    *   - the FileSystem-based checkpoint file manager instead of the
-    *     FileContext one, which on a local file system without Hadoop's
-    *     native library forks `readlink` on every rename. Both write a file
-    *     under a temporary name and rename it into place. The FileSystem-
-    *     based one writes through the `file://` file system, so on
-    *     `NoCrcLocalFileSystem` the offset and commit logs get no Hadoop
-    *     `.crc` sidecar either; FileContext writes one whatever
-    *     `fs.file.impl` says.
+  /** The checkpoint file manager setting. [[withCheckpointSettings]] sets
+    * it to the FileSystem-based manager instead of the FileContext one,
+    * which on a local file system without Hadoop's native library forks
+    * `readlink` on every rename. Both write a file under a temporary name
+    * and rename it into place. The FileSystem-based one writes through the
+    * `file://` file system, so on `NoCrcLocalFileSystem` the offset and
+    * commit logs get no Hadoop `.crc` sidecar either; FileContext writes
+    * one whatever `fs.file.impl` says.
     *
     * The trade is corruption detection, not atomicity: a checkpoint file
     * corrupted on disk is read as it is instead of failing its checksum. A
-    * deployment that wants the check sets the settings on its own session
-    * after this scope, or runs on a store that checks its own bytes (HDFS,
-    * object stores).
+    * session that sets the manager itself (a deployment that wants the
+    * check, or relies on its own manager for an object store) keeps it.
     */
-  private val CheckpointSettings: Seq[(String, String)] = Seq(
-    "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
-    "spark.sql.streaming.checkpointFileManagerClass" -> classOf[FileSystemBasedCheckpointFileManager].getName)
+  private val CheckpointManager = "spark.sql.streaming.checkpointFileManagerClass"
 
-  /** Run `body` (which starts streaming queries) with [[CheckpointSettings]]
-    * set on the session, then restore the session's own values. A query
-    * clones the session when it starts, so a query started in `body` keeps
-    * the settings for its lifetime.
+  /** Run `body` (which starts streaming queries) with the FileSystem-based
+    * checkpoint manager (see [[CheckpointManager]]) unless the session set
+    * its own, then unset it again. A query clones the session when it
+    * starts, so a query started in `body` keeps the manager for its
+    * lifetime.
     */
-  private[graft] def withCheckpointSettings[T](spark: SparkSession)(body: => T): T = {
-    val saved = CheckpointSettings.map { case (k, _) => k -> spark.conf.getOption(k) }
-    CheckpointSettings.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
+  private[graft] def withCheckpointSettings[T](spark: SparkSession)(body: => T): T =
+    if (spark.conf.getOption(CheckpointManager).isDefined) body
+    else {
+      spark.conf.set(CheckpointManager, classOf[FileSystemBasedCheckpointFileManager].getName)
+      try body
+      finally spark.conf.unset(CheckpointManager)
     }
-  }
 
   /** Wire the full reference topology over a streaming payment DataFrame
     * (from [[fromKafka]], a MemoryStream, or any streaming source with the
@@ -300,7 +310,8 @@ object PaymentPipeline {
     * state store pins `spark.sql.shuffle.partitions` across restarts. Both
     * start under [[withCheckpointSettings]]: no `readlink` fork per
     * checkpoint file, and no checksum sidecars on a local file system
-    * without Hadoop's checksums (see [[CheckpointSettings]] for the trade).
+    * without Hadoop's checksums, unless the session chose its own checkpoint
+    * file manager (see [[CheckpointManager]] for the trade).
     *
     * @param sinkDir  rows routed to the FOO/BAR "topics" land in
     *                 `sinkDir/topic=rails-foo-topic/` etc. as parquet —
@@ -338,9 +349,9 @@ object PaymentPipeline {
         .start()
 
       // O7–O9 — re-key in the streaming plan, so Catalyst prunes the decode
-      // to the two columns the sum reads; the store collects each batch's
-      // rows in one job and sums them into the running balances (the
-      // KTable), logs and then serves them.
+      // to the two columns the sum reads; the store sums each batch's rows
+      // per partition in one job and adds them into the running balances
+      // (the KTable), logs and then serves them.
       val balance = PaymentOps
         .rekeyToAccountAmount(merged)
         .writeStream

@@ -4,6 +4,7 @@ import graft.SparkSpec
 import graft.model.{PaymentEvent, PaymentSerde}
 import graft.sources.NoCrcLocalFileSystem
 import org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec
+import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
@@ -487,25 +488,57 @@ class PaymentPipelineSpec extends AnyFunSuite with SparkSpec {
     // whatever `fs.file.impl` says. Spark's own checksum files (the
     // fileChecksum setting) are written only for state stores.
     implicit val sqlCtx = spark.sqlContext
-    val keys   = Seq("spark.sql.streaming.checkpoint.fileChecksum.enabled", "spark.sql.streaming.checkpointFileManagerClass")
+    val manager = "spark.sql.streaming.checkpointFileManagerClass"
+    val keys    = Seq("spark.sql.streaming.checkpoint.fileChecksum.enabled", manager)
+    val noCrc   = Seq("fs.file.impl" -> classOf[NoCrcLocalFileSystem].getName, "fs.file.impl.disable.cache" -> "true")
+    /** The checkpoint logs' file names after one batch through `start`. */
+    def logNames(name: String): Seq[String] = {
+      val input = MemoryStream[PaymentEvent]
+      val tmp   = tempDir(name).toString
+      noCrc.foreach { case (k, v) => spark.conf.set(k, v) }
+      val topo =
+        try PaymentPipeline.start(input.toDF(), s"$tmp/ckpt", s"$tmp/sink")
+        finally noCrc.foreach { case (k, _) => spark.conf.unset(k) }
+      try {
+        input.addData(golden: _*)
+        topo.processAllAvailable()
+      } finally topo.stop()
+      val logs = for (q <- Seq("routing", "balance"); d <- Seq("commits", "offsets")) yield new java.io.File(s"$tmp/ckpt/$q/$d")
+      logs.flatMap(d => d.list().toSeq.map(n => s"${d.getParentFile.getName}/${d.getName}/$n"))
+    }
+    def sidecars(names: Seq[String]) = names.filter(n => n.endsWith(".crc") || n.contains("checksum"))
     val before = keys.map(spark.conf.getOption)
-    val noCrc  = Seq("fs.file.impl" -> classOf[NoCrcLocalFileSystem].getName, "fs.file.impl.disable.cache" -> "true")
-    val input  = MemoryStream[PaymentEvent]
-    val tmp    = tempDir("graft-ckpt-crc").toString
-    noCrc.foreach { case (k, v) => spark.conf.set(k, v) }
-    val topo =
-      try PaymentPipeline.start(input.toDF(), s"$tmp/ckpt", s"$tmp/sink")
-      finally noCrc.foreach { case (k, _) => spark.conf.unset(k) }
-    try {
-      input.addData(golden: _*)
-      topo.processAllAvailable()
-    } finally topo.stop()
-    val logs = for (q <- Seq("routing", "balance"); d <- Seq("commits", "offsets")) yield new java.io.File(s"$tmp/ckpt/$q/$d")
-    val names    = logs.flatMap(d => d.list().toSeq.map(n => s"${d.getParentFile.getName}/${d.getName}/$n"))
-    val sidecars = names.filter(n => n.endsWith(".crc") || n.contains("checksum"))
+    val names  = logNames("graft-ckpt-crc")
     assert(names.exists(_.endsWith("commits/0")), s"no commit written: $names")
-    assert(sidecars.isEmpty, s"checksum sidecars: $sidecars")
+    assert(sidecars(names).isEmpty, s"checksum sidecars: ${sidecars(names)}")
     assert(keys.map(spark.conf.getOption) == before, "start changed the session's checkpoint settings")
+    // a manager the session chose itself is the one start's queries run with
+    val fileContext = classOf[FileContextBasedCheckpointFileManager].getName
+    spark.conf.set(manager, fileContext)
+    try {
+      assert(sidecars(logNames("graft-ckpt-own")).nonEmpty, "start overrode the session's checkpoint file manager")
+      assert(spark.conf.get(manager) == fileContext)
+    } finally spark.conf.unset(manager)
+  }
+
+  test("a record without an account adds to no balance, and the changelog stays writable") {
+    // Kafka Streams' grouped aggregation drops a record whose key is null;
+    // the store drops a null account, in a batch and in a changelog an
+    // earlier version wrote through Spark's writer
+    val tmp   = tempDir("graft-null-account").toString
+    val dir   = s"$tmp/totals"
+    val store = new PaymentPipeline.BalanceStore(spark, dir, compactEvery = 0L)
+    store.append(Seq[(String, Option[Long])](("ABC", Some(100L)), (null, Some(7L))).toDF("fromAccount", "balance"), 0L)
+    assert(store.snapshot == Map("ABC" -> 100L), s"got ${store.snapshot}")
+    assert(new PaymentPipeline.BalanceStore(spark, dir).snapshot == Map("ABC" -> 100L))
+    Seq[(String, Option[Long], Long)]((null, Some(7L), 1L))
+      .toDF("fromAccount", "balance", "batch_id")
+      .write.mode("append").parquet(dir)
+    val reopened = new PaymentPipeline.BalanceStore(spark, dir, compactEvery = 0L)
+    assert(reopened.snapshot == Map("ABC" -> 100L), s"recovered ${reopened.snapshot}")
+    reopened.compact()
+    reopened.append(Seq[(String, Option[Long])](("ABC", Some(1L))).toDF("fromAccount", "balance"), 2L)
+    assert(new PaymentPipeline.BalanceStore(spark, dir).snapshot == Map("ABC" -> 101L))
   }
 
   test("a leftover .part-*.tmp file is ignored by recovery and removed by the next compaction") {
